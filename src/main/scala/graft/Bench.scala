@@ -78,10 +78,11 @@ object Bench {
   private def fmt(d: Double, decimals: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(d))
 
-  /** Numeric scale factor from the data dir name ("…/sf0.1" → "0.1");
-    * "-1" when the dir does not encode one (a custom path). */
-  private def sfNum(dir: String): String =
-    "sf([0-9]*\\.?[0-9]+)$".r.findFirstMatchIn(dir).map(_.group(1)).getOrElse("-1")
+  /** Numeric scale factor from the data dir name ("…/sf0.1" or "…/sf0.1/"
+    * → "0.1"); "-1" when the dir does not encode one (a custom path). */
+  private[graft] def sfNum(dir: String): String =
+    "sf([0-9]*\\.?[0-9]+)$".r.findFirstMatchIn(dir.replaceAll("/+$", ""))
+      .map(_.group(1)).getOrElse("-1")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -1,16 +1,18 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Session-scoped memo for shared derived ARTIFACTS — trained models,
-  * verified pair lists, benchmark gram sets — keyed by (session, string
-  * key, typically `kind/dataDir`).
+/** Session-scoped memo for every shared derived ARTIFACT of the library —
+  * persisted edge lists and baskets, checkpointed near-dup pair/label
+  * tables, trained quantizers and models, exact counts and plan decisions —
+  * keyed by (session, string key, typically `kind/dataDir`).
   *
   * Why this exists: several registered queries derive from the same
   * expensive intermediate (the bigram LM, the BPE symbol table, the
-  * benchmark n-gram set). Re-deriving per invocation re-pays the build —
+  * co-purchase edge list). Re-deriving per invocation re-pays the build —
   * and worse, a size gate that needs the artifact's exact row count
   * (`Plans.broadcastIfSmall`) turns into an EAGER materialization job on
   * every call (the round-10 `ngram_perplexity` 8× regression). The memo
@@ -18,13 +20,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * single-session analog of the persisted model/feature table a production
   * pipeline maintains next to the corpus.
   *
-  * Contract (the same one [[graft.dedup.DedupQueries]]' artifact memo
-  * documents, centralized):
-  *   - `build` runs inside `computeIfAbsent`, so it MUST NOT call back
-  *     into this object (ConcurrentHashMap forbids recursive update —
-  *     same-bin collisions throw, other-bin inserts can be lost). Resolve
-  *     nested artifacts BEFORE the enclosing memo call and close over
-  *     them.
+  * Contract:
+  *   - RE-ENTRANT: `computeIfAbsent` only publishes an empty cell; `build`
+  *     runs after the map update returns, under the cell's own lock. A
+  *     build may therefore resolve other keys through this object.
+  *     Concurrent callers of one key share one build; a key whose build
+  *     needs itself is a caller bug (it recurses until the stack overflows).
+  *   - a build that throws leaves no entry, so the next call rebuilds;
+  *     [[persisted]] also unpersists its frame when the materializing
+  *     action throws, so a failed build leaks no cache blocks.
   *   - values must be SELF-CONTAINED: persisted or checkpoint-truncated
   *     frames with no live dependence on caches a harness drain releases.
   *   - determinism of every build makes a memoized result bit-identical
@@ -32,83 +36,122 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Lifetime: entries of stopped sessions are swept on access; a long-lived
   * session probing many data dirs (ScaleProbe) calls [[evictSession]]
-  * between dirs, which also runs the eviction hooks the per-module memos
-  * (graph edges/baskets, trained quantizers, dedup pair/label tables)
-  * register — one release path for every session cache in the library. */
+  * between dirs — the one release path for every session artifact.
+  * `Tables`' schema memo stays apart: it is file metadata guarded by a
+  * freshness token, and evicting it would add a footer job per table load. */
 object Memo {
 
-  private val memo = new ConcurrentHashMap[(SparkSession, String), AnyRef]
+  /** One memo entry: built at most once, outside the map's update. */
+  private final class Cell {
+    @volatile private var value: AnyRef = _
+    private var failed = false // guarded by this
 
-  /** Module-registered eviction callbacks (see [[onEvict]]). */
-  private val evictHooks = new ConcurrentLinkedQueue[SparkSession => Unit]
+    /** The value, building it on first use; None when an earlier build of
+      * this cell threw (the cell has then left the map — look up again). */
+    def force(build: => AnyRef, drop: => Unit): Option[AnyRef] = synchronized {
+      if (failed) None
+      else {
+        if (value == null)
+          try value = build
+          catch { case e: Throwable => failed = true; drop; throw e }
+        Some(value)
+      }
+    }
 
-  /** Generic artifact memo. `build` must not call back into [[Memo]]. */
+    /** The value if built; never waits on a build in progress. */
+    def built: Option[AnyRef] = Option(value)
+  }
+
+  private val memo = new ConcurrentHashMap[(SparkSession, String), Cell]
+
+  /** Generic artifact memo: `build` runs once per (session, key). */
+  @annotation.tailrec
   def artifact[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T = {
     sweepStopped()
-    memo.computeIfAbsent((spark, key), _ => build).asInstanceOf[T]
+    val k = (spark, key)
+    val cell = memo.computeIfAbsent(k, _ => new Cell)
+    cell.force(build, memo.remove(k, cell)) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None => artifact(spark, key)(build) // a concurrent build failed
+    }
   }
+
+  /** A persisted frame together with the result of `materialize` run on it,
+    * built once. `materialize` is the action that fills the cache (a count,
+    * a guard aggregate); if it throws, the frame is unpersisted and no
+    * entry is kept, so a retry starts clean. */
+  def persisted[R](spark: SparkSession, key: String)(build: => DataFrame)(
+      materialize: DataFrame => R): (DataFrame, R) =
+    artifact(spark, key) {
+      val df = build.persist()
+      try (df, materialize(df))
+      catch { case e: Throwable => unpersistQuiet(df); throw e }
+    }
 
   /** A persisted frame together with its EXACT row count, built once —
     * the count both materializes the persist and feeds
     * [[Plans.broadcastIfSmall]] gates for free on every later call. */
   def countedArtifact(spark: SparkSession, key: String)(build: => DataFrame): (DataFrame, Long) =
-    artifact(spark, key) {
-      val df = build.persist()
-      (df, df.count())
-    }
+    persisted(spark, key)(build)(_.count())
 
   /** Memoized exact count of a (session, key)-stable deterministic frame —
     * for gates over frames that are already materialized (checkpointed
     * model tables) or lazily re-derived per invocation, where the
-    * repeated eager count job is the waste. The frame is a STRICT
-    * parameter on purpose: its construction (which may resolve other
-    * memo artifacts) happens before the computeIfAbsent, so only the
-    * count action — which cannot re-enter this map — runs inside it. */
+    * repeated eager count job is the waste. */
   def countOf(spark: SparkSession, key: String, df: DataFrame): Long =
     artifact(spark, s"$key/#count")(java.lang.Long.valueOf(df.count())).longValue()
 
-  /** Register a per-module eviction callback, run by [[evictSession]].
-    * Modules with private memo maps call this once at object init; an
-    * uninitialized module object has no entries to evict, so lazy
-    * registration is sound. */
-  def onEvict(hook: SparkSession => Unit): Unit = evictHooks.add(hook)
+  /** Memoized plan decision (a broadcast or fan-out verdict): `decide`
+    * runs once per (session, key). */
+  def decision(spark: SparkSession, key: String)(decide: => Boolean): Boolean =
+    artifact(spark, s"$key/#decision")(java.lang.Boolean.valueOf(decide)).booleanValue()
 
-  /** Release every memoized artifact of `spark` — this map's entries
-    * (unpersisting any frames found in the values) plus every registered
-    * per-module memo. Safe while the session is live; the next access
-    * simply rebuilds. */
-  def evictSession(spark: SparkSession): Unit = {
-    removeAndUnpersist(k => k._1 eq spark)
-    evictHooks.forEach(h => h(spark))
-  }
+  /** Release every memoized artifact of `spark`: drop its entries and free
+    * the blocks of the frames found in their values. Safe while the
+    * session is live; the next access simply rebuilds. */
+  def evictSession(spark: SparkSession): Unit =
+    removeAndRelease(k => k._1 eq spark)
 
   private def sweepStopped(): Unit =
-    removeAndUnpersist(k => k._1.sparkContext.isStopped)
+    removeAndRelease(k => k._1.sparkContext.isStopped)
 
-  private def removeAndUnpersist(p: ((SparkSession, String)) => Boolean): Unit = {
+  private def removeAndRelease(p: ((SparkSession, String)) => Boolean): Unit = {
     val it = memo.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       if (p(e.getKey)) {
-        unpersistValue(e.getValue)
+        e.getValue.built.foreach(releaseValue)
         it.remove()
       }
     }
   }
 
-  /** Best-effort release of frames inside a memo value; unpersist of a
-    * never-persisted (checkpointed) frame is a harmless no-op. */
-  private def unpersistValue(v: AnyRef): Unit = v match {
-    case ds: org.apache.spark.sql.Dataset[_] => unpersistQuiet(ds)
+  /** Best-effort release of the frames inside a memo value (bare or in a
+    * tuple): unpersist the frame, and free the blocks of every locally
+    * checkpointed RDD its plan reads — a truncated artifact's own storage,
+    * which `Dataset.unpersist` does not reach. */
+  private def releaseValue(v: AnyRef): Unit = v match {
+    case ds: Dataset[_] => release(ds)
     case p: Product => p.productIterator.foreach {
-      case ds: org.apache.spark.sql.Dataset[_] => unpersistQuiet(ds)
+      case ds: Dataset[_] => release(ds)
       case _ => ()
     }
     case _ => ()
   }
 
+  private def release(ds: Dataset[_]): Unit = {
+    unpersistQuiet(ds)
+    ds.queryExecution.logical.foreach {
+      case r: LogicalRDD if r.rdd.isCheckpointed =>
+        quietly(r.rdd.unpersist(blocking = false))
+      case _ => ()
+    }
+  }
+
   // a stopped context rejects unpersist — the blocks are gone anyway
-  private def unpersistQuiet(ds: org.apache.spark.sql.Dataset[_]): Unit =
-    try ds.unpersist(blocking = false)
+  private def unpersistQuiet(ds: Dataset[_]): Unit = quietly(ds.unpersist(blocking = false))
+
+  private def quietly(body: => Unit): Unit =
+    try body
     catch { case _: IllegalStateException => () }
 }

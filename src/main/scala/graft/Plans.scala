@@ -33,8 +33,7 @@ object Plans {
   val DefaultBroadcastRowLimit: Long = 4L * 1000 * 1000
 
   def broadcastRowLimit(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get(BroadcastRowLimitKey, DefaultBroadcastRowLimit.toString).toLong
+    Conf.long(df.sparkSession, BroadcastRowLimitKey, DefaultBroadcastRowLimit)
 
   /** Hint `df` as the build side of an equi-join: `broadcast` when
     * `estRows` (an exact count of a persisted frame, or a conservative
@@ -82,13 +81,13 @@ object Plans {
     * Constant-size dimensions (nation=25, region=5 rows at every SF) stay
     * unconditionally broadcast.
     *
-    * `cacheKey` (recommended: `"site/dataDir"`) memoizes the DECISION per
-    * (session, key, limit): computing the estimate forces analysis +
+    * `cacheKey` (recommended: `"site/dataDir"`) memoizes the DECISION in
+    * [[Memo]] per (session, key, limit): computing the estimate forces analysis +
     * optimization of the dimension subtree on every call — a visible
     * constant cost on sub-2 s queries with several gated dims (the
     * round-10 q2/q3 movers). The gated frame for a given site and dir is
     * deterministic, so the decision is too; the limit is part of the key
-    * so a flipped `spark.graft.broadcastRowLimit` test conf never sees a
+    * so a flipped `spark.graft.broadcastByteLimit` test conf never sees a
     * stale verdict. Pass no key to keep the uncached behavior. */
   def broadcastIfSmallStats(df: DataFrame, cacheKey: String = null): DataFrame =
     if (statsTrusted(df.sparkSession)) df
@@ -100,27 +99,10 @@ object Plans {
     * ≤ one row per qualifying part, so "the part dimension fits" bounds
     * the aggregate too). */
   def statsFitsBroadcast(df: DataFrame, cacheKey: String = null): Boolean = {
-    val spark = df.sparkSession
-    val limit = spark.conf
-      .get(BroadcastByteLimitKey, DefaultBroadcastByteLimit.toString).toLong
+    val limit = Conf.long(df.sparkSession, BroadcastByteLimitKey, DefaultBroadcastByteLimit)
     def compute: Boolean = df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit
     if (cacheKey == null) compute
-    else {
-      decisionCache.keySet.removeIf(_._1.sparkContext.isStopped)
-      decisionCache.computeIfAbsent((spark, s"$cacheKey/$limit"),
-        _ => java.lang.Boolean.valueOf(compute)).booleanValue()
-    }
-  }
-
-  // A DEDICATED map (not graft.Memo's): gated queries may one day be
-  // built inside a Memo artifact, and nesting computeIfAbsent on one
-  // ConcurrentHashMap is a contract violation. Released with the rest of
-  // the session memos by Memo.evictSession.
-  private val decisionCache =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), java.lang.Boolean]
-
-  Memo.onEvict { spark =>
-    decisionCache.keySet.removeIf(_._1 eq spark)
+    else Memo.decision(df.sparkSession, s"fits-broadcast/$cacheKey/$limit")(compute)
   }
 
   /** Conf key for [[sizeWidth]]'s rows-per-partition target. */
@@ -140,8 +122,7 @@ object Plans {
     * cores-many per-task constants per round per stage, while a 10⁹-edge
     * deployment graph gets hundreds of partitions from the same formula. */
   def sizeWidth(spark: org.apache.spark.sql.SparkSession, rows: Long): Int = {
-    val per = spark.conf
-      .get(RowsPerPartitionKey, DefaultRowsPerPartition.toString).toLong.max(1L)
+    val per = Conf.long(spark, RowsPerPartitionKey, DefaultRowsPerPartition).max(1L)
     ((rows + per - 1) / per).max(1L).min(Int.MaxValue.toLong).toInt
   }
 
@@ -186,17 +167,13 @@ object Plans {
   def fanOut(df: DataFrame, key: org.apache.spark.sql.Column,
       cacheKey: String = null): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.conf.get(FanOutKey, "true").toBoolean) df
+    if (!Conf.boolean(spark, FanOutKey, true)) df
     else {
       val target = spark.sparkContext.defaultParallelism
       def needsSpread: Boolean = df.rdd.getNumPartitions < target
       val spread =
         if (cacheKey == null) needsSpread
-        else {
-          decisionCache.keySet.removeIf(_._1.sparkContext.isStopped)
-          decisionCache.computeIfAbsent((spark, s"fanout/$cacheKey/$target"),
-            _ => java.lang.Boolean.valueOf(needsSpread)).booleanValue()
-        }
+        else Memo.decision(spark, s"fanout/$cacheKey/$target")(needsSpread)
       if (spread) df.repartition(target, key) else df
     }
   }

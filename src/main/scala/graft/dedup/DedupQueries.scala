@@ -687,6 +687,9 @@ object DedupQueries {
   /** Session conf selecting [[dedupComponents]]' lineage-truncation mode. */
   val ReliableCheckpointConf = "spark.graft.components.reliableCheckpoint"
 
+  private def reliableCheckpoint(spark: SparkSession): Boolean =
+    graft.Conf.boolean(spark, ReliableCheckpointConf, false)
+
   /** Eager lineage truncation for the label-propagation loop.
     *
     * Default: `localCheckpoint` — blocks live on executors, fastest, but an
@@ -700,8 +703,7 @@ object DedupQueries {
     * clear message if the knob is on without a dir. */
   private[graft] def truncate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val reliable = spark.conf.getOption(ReliableCheckpointConf).exists(_.toBoolean)
-    if (!reliable) df.localCheckpoint()
+    if (!reliableCheckpoint(spark)) df.localCheckpoint()
     else {
       val sc = spark.sparkContext
       require(sc.getCheckpointDir.isDefined,
@@ -750,9 +752,9 @@ object DedupQueries {
       .withColumn("component_size",
         count(lit(1)).over(Window.partitionBy(col("canonical"))))
 
-  /** Session-scoped memo of the two shared near-dup ARTIFACTS — the
-    * verified pair list and the component label table — keyed by
-    * (session, dir): seven registered queries derive from one or the other
+  /** The two shared near-dup ARTIFACTS — the verified pair list and the
+    * component label table — memoized per (session, dir) in
+    * [[graft.Memo]]: seven registered queries derive from one or the other
     * (components/canonical/savings/pagerank/eval, the corpus pipeline's
     * near-dup stage, the leakage-safe split), and each previously re-ran
     * the full LSH candidate generation + verification. Both artifacts are
@@ -761,32 +763,15 @@ object DedupQueries {
     * scoped block before the memo entry is published); determinism makes a
     * memoized result bit-identical to a rebuild. The cluster-deployment
     * analog is the persisted pair/label table every production dedup
-    * pipeline maintains. Stopped sessions evict on access. */
-  private val artifactMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
-
-  // release path for multi-dir sessions (ScaleProbe) — see graft.Memo.
-  // Values are checkpoint-truncated (unpersist is a no-op); removing the
-  // entries releases the last references so the ContextCleaner reclaims
-  // the checkpoint blocks.
-  graft.Memo.onEvict { spark =>
-    val it = artifactMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(blocking = false); it.remove() }
-    }
-  }
-
+    * pipeline maintains. */
   private def memoArtifact(spark: SparkSession, dir: String, kind: String)(
       build: => DataFrame): DataFrame = {
-    artifactMemo.keySet.removeIf(_._1.sparkContext.isStopped)
     // the truncation mode is part of the key: a session that opts into
     // reliable checkpointing expects durably-materialized artifacts (and
     // the fail-fast require when no checkpoint dir is set), so a
     // local-mode memo entry must not satisfy a reliable-mode request
-    val mode = if (spark.conf.getOption(ReliableCheckpointConf).exists(_.toBoolean))
-      "reliable" else "local"
-    artifactMemo.computeIfAbsent((spark, dir, s"$kind/$mode"), _ => build)
+    val mode = if (reliableCheckpoint(spark)) "reliable" else "local"
+    graft.Memo.artifact(spark, s"dedup-$kind/$mode/$dir")(build)
   }
 
   /** The verified near-dup pair list (doc_a, doc_b), truncated. */
@@ -801,20 +786,10 @@ object DedupQueries {
       }
     }
 
-  /** The converged min-label table (node, lab), truncated per round.
-    *
-    * The pairs artifact is resolved BEFORE entering the labels
-    * `computeIfAbsent`: nesting two `computeIfAbsent` calls on the same
-    * ConcurrentHashMap violates the CHM contract — when both keys are
-    * absent and hash to the same bin the inner call throws
-    * `IllegalStateException("Recursive update")`, and in the
-    * non-colliding case the inner insert can be lost. Hoisting the inner
-    * lookup makes the mapping function CHM-free; at worst a concurrent
-    * racer builds the pairs artifact twice (determinism makes the copies
-    * identical; only one is published). */
-  private def componentLabelsMemo(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = nearPairsMemo(spark, dir)
+  /** The converged min-label table (node, lab), truncated per round. */
+  private def componentLabelsMemo(spark: SparkSession, dir: String): DataFrame =
     memoArtifact(spark, dir, "labels") {
+      val pairs = nearPairsMemo(spark, dir)
       val edges = truncate(
         pairs.union(pairs.select(col("doc_b"), col("doc_a"))).toDF("src", "dst"))
       var labels = truncate(
@@ -840,7 +815,6 @@ object DedupQueries {
       }
       labels
     }
-  }
 
   /** Oracle: transitive closure as a recursive CTE (UNION dedup terminates
     * the undirected cycles), min reachable id = the canonical label. */

@@ -18,8 +18,8 @@ import graft.Tables
   */
 object GraphQueries {
 
-  /** Session-scoped memo of the persisted co-purchase edge list and its
-    * exact row count, keyed by (session, data dir).
+  /** The persisted co-purchase edge list and its exact row count, memoized
+    * per (session, data dir) in [[graft.Memo]].
     *
     * Ten queries in this family start from the identical edge derivation;
     * before the memo each rebuilt (and re-persisted, via Caches, drained
@@ -32,37 +32,12 @@ object GraphQueries {
     * single-session analog. The count is computed once on the persisted
     * frame and feeds every [[graft.Plans.broadcastIfSmall]] gate in the
     * family (degree and adjacency tables are ≤ 2|E| rows by construction),
-    * so the size-gated joins cost no extra jobs. Entries of stopped
-    * sessions are evicted on access. */
-  private val edgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Long)]
+    * so the size-gated joins cost no extra jobs. */
+  private def copurchaseEdgesCounted(spark: SparkSession, dir: String): (DataFrame, Long) =
+    graft.Memo.countedArtifact(spark, s"copurchase-edges/$dir")(copurchaseEdges(spark, dir))
 
-  // release path for a long-lived session probing many data dirs
-  // (ScaleProbe): Memo.evictSession unpersists and drops this module's
-  // entries along with every other registered session memo
-  graft.Memo.onEvict { spark =>
-    val ei = edgeMemo.entrySet().iterator()
-    while (ei.hasNext) {
-      val e = ei.next()
-      if (e.getKey._1 eq spark) { e.getValue._1.unpersist(blocking = false); ei.remove() }
-    }
-    val bi = basketMemo.entrySet().iterator()
-    while (bi.hasNext) {
-      val e = bi.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(blocking = false); bi.remove() }
-    }
-  }
-
-  private def copurchaseEdgesCounted(spark: SparkSession, dir: String): (DataFrame, Long) = {
-    edgeMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    edgeMemo.computeIfAbsent((spark, dir), { _ =>
-      val e = copurchaseEdges(spark, dir).persist()
-      (e, e.count())
-    })
-  }
-
-  /** Session-scoped memo of the two basket base tables the whole family
-    * derives from — the same rationale as [[edgeMemo]], one level lower:
+  /** The two basket base tables the whole family derives from, persisted
+    * and memoized like [[copurchaseEdgesCounted]], one level lower:
     *   - ORDER baskets (l_orderkey → sorted distinct part array): feeds
     *     [[copurchaseEdges]], [[frequentPairs]], [[frequentTriples]] and
     *     [[ssspWeighted]]'s weighted pair counts;
@@ -73,28 +48,22 @@ object GraphQueries {
     * basket key IS the dedup); every consumer re-derives its shape by a
     * narrow explode/projection over the cached arrays, so the family pays
     * the fact-table shuffle once per session instead of once per query. */
-  private val basketMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
-
   private def memoBasket(spark: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    basketMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    basketMemo.computeIfAbsent((spark, dir, kind), { _ =>
-      val b = build.persist()
+      build: => DataFrame): DataFrame =
+    graft.Memo.persisted(spark, s"basket-$kind/$dir")(build) { b =>
       // ONE-TIME packed-key guard for every PairExpandSql consumer (this
       // is their shared choke point): the u·2³²+v packing wraps silently
       // (non-ANSI multiply) for ids ≥ 2³¹ and would collide distinct
       // pairs. `ps` is sorted ascending, so max(last element) is the max
       // id in the table; the check is one tiny agg job per session per
       // basket kind — NOT a per-element branch in the expansion's codegen
-      // span (measured +1.4 s on item_cf_recs when inlined there).
+      // span (measured +1.4 s on item_cf_recs when inlined there). It also
+      // materializes the persist; if it throws, Memo unpersists the frame.
       val r = b.agg(max(element_at(col("ps"), -1))).head()
       val mx = if (r.isNullAt(0)) 0L else r.getLong(0)
       require(mx < (1L << 31),
         s"graft: max part id $mx >= 2^31 — packed pair key would wrap; use struct pair keys")
-      b
-    })
-  }
+    }._1
 
   /** (l_orderkey, ps): sorted distinct parts per order. */
   private def orderBaskets(spark: SparkSession, dir: String): DataFrame =
@@ -130,8 +99,7 @@ object GraphQueries {
     * to the uncapped one — the cap is a no-op at TPC-H shape (k ≈ 30)
     * and exists for the skewed deployment. */
   private[graft] def cappedCustBaskets(spark: SparkSession, dir: String): DataFrame = {
-    val cap = spark.conf.getOption("spark.graft.maxBasketSize")
-      .map(_.toInt).getOrElse(Int.MaxValue)
+    val cap = graft.Conf.int(spark, "spark.graft.maxBasketSize", Int.MaxValue)
     require(cap >= 2, s"spark.graft.maxBasketSize must be >= 2, got $cap")
     val b = custBaskets(spark, dir)
     if (cap == Int.MaxValue) b

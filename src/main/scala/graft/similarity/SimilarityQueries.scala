@@ -336,8 +336,7 @@ object SimilarityQueries {
     * each previously re-ran it. The scoped block releases nearPairs'
     * internal candidate persist once the truncation materializes; the
     * pairs artifact is deterministic, so a memoized copy is bit-identical
-    * to a rebuild. NOTE: resolved via [[graft.Memo.artifact]] — callers
-    * must not invoke this inside another Memo build (CHM contract).
+    * to a rebuild.
     *
     * The memo carries the EXACT pair count alongside the frame: a
     * checkpointed RDD exposes no size statistics, so without an explicit
@@ -565,8 +564,8 @@ object SimilarityQueries {
     * max-of-struct, no window over the corpus), then the same exploded
     * (cell, dim) partial aggregation as [[labelCentroids]]. Empty cells
     * simply drop out of the next round, identically in both engines. */
-  /** Session-scoped memo of the TRAINED quantizer tables (IVF centroids,
-    * PQ codebooks), keyed by (session, dir, kind) — the
+  /** The TRAINED IVF quantizer, memoized per (session, dir) in
+    * [[graft.Memo]] like the PQ codebook ([[pqCodebookTable]]) — the
     * [[graft.graph.GraphQueries]] edge-memo pattern applied to model
     * artifacts: eight registered queries consume a trained quantizer, and
     * before the memo each re-ran the full Lloyd loop in-query (the r9
@@ -574,29 +573,11 @@ object SimilarityQueries {
     * the r7 price" — the memo IS that stored quantizer for the session;
     * a cluster deployment persists the same table). The trained frames are
     * already localCheckpoint-truncated, so the memo holds self-contained
-    * materialized plans; entries of stopped sessions evict on access.
-    * Determinism makes this safe: every training walks the identical
-    * trajectory, so a memoized result is bit-identical to a retrain. */
-  private val trainedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
-
-  // release path for multi-dir sessions (ScaleProbe) — see graft.Memo
-  graft.Memo.onEvict { spark =>
-    val it = trainedMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) { e.getValue.unpersist(blocking = false); it.remove() }
-    }
-  }
-
-  private def memoTrained(spark: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    trainedMemo.keySet.removeIf(_._1.sparkContext.isStopped)
-    trainedMemo.computeIfAbsent((spark, dir, kind), _ => build)
-  }
-
+    * materialized plans. Determinism makes this safe: every training walks
+    * the identical trajectory, so a memoized result is bit-identical to a
+    * retrain. */
   private[graft] def trainedCentroidTable(spark: SparkSession, dir: String): DataFrame =
-    memoTrained(spark, dir, "ivf")(trainCentroidTable(spark, dir))
+    graft.Memo.artifact(spark, s"trained-ivf/$dir")(trainCentroidTable(spark, dir))
 
   private def trainCentroidTable(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir)
@@ -1090,7 +1071,7 @@ object SimilarityQueries {
     * partial-agg max-of-struct), then a (s, code, dim) partial aggregation
     * whose width is the codebook, not the corpus. */
   private[graft] def pqCodebookTable(spark: SparkSession, dir: String): DataFrame =
-    memoTrained(spark, dir, "pq")(trainPqCodebookTable(spark, dir))
+    graft.Memo.artifact(spark, s"trained-pq/$dir")(trainPqCodebookTable(spark, dir))
 
   private def trainPqCodebookTable(spark: SparkSession, dir: String): DataFrame = {
     val subs = subvectors(spark, dir)

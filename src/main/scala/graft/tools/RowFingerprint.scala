@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Order-free, duplicate-sensitive row fingerprint shared by the probe
-  * tools (GateOffProbe, CboBench): (row count, Σ crc32(canonical row
+  * and soak tools (GateOffProbe, CboBench, Soak): (row count, Σ crc32(canonical row
   * string)), computed with no driver-side row materialization — the
   * library's no-collect rule applies to tools too. Both compared runs
   * execute the same final projection, so identical values imply identical

@@ -11,10 +11,10 @@ import graft.plans.GraftSession
   * `runMain graft.tools.Soak [trials] [sfDir]` (defaults 3, sf0.01) runs
   * every registered query `trials` times and fails (exit 1) on:
   *   - any query error in any trial;
-  *   - any cross-trial RESULT divergence — each trial digests the full
-  *     result set (order-insensitive) and a digest that isn't identical
-  *     across trials means the query is nondeterministic, which the
-  *     driver's hash-compared oracle cannot tolerate.
+  *   - any cross-trial RESULT divergence — each trial takes the result
+  *     set's order-free [[RowFingerprint]] (rows, fingerprint), and a pair
+  *     that isn't identical across trials means the query is
+  *     nondeterministic, which a hash-compared oracle cannot tolerate.
   * Per-query median wall times across trials are printed at the end — the
   * stable number a single contended pass can't fake (r5's driver bench
   * reported a 55× phantom regression exactly because it ran once). */
@@ -25,36 +25,19 @@ object Soak {
     val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // per query: digest per trial + wall seconds per trial ("ERR" digests a failure)
+    // per query: (rows, fingerprint) per trial (None = the trial failed)
+    // + wall seconds per trial
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val digests = collection.mutable.Map.empty[String, Vector[String]].withDefaultValue(Vector.empty)
+    val digests = collection.mutable.Map.empty[String, Vector[Option[(Long, Long)]]]
+      .withDefaultValue(Vector.empty)
     val times = collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
 
     for (t <- 1 to trials; name <- names) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       val digest =
-        try {
-          val df = fn(spark, sfDir)
-          // order-insensitive content digest: hash every row's string form,
-          // fold with an order-free combiner (sum of per-row hashes), all on
-          // executors — nothing but one long returns to the driver
-          val rowHash = org.apache.spark.sql.functions.xxhash64(
-            org.apache.spark.sql.functions.to_json(
-              org.apache.spark.sql.functions.struct(df.columns.map(df.col).toSeq: _*)))
-          // single-row fetch of a fully aggregated result — O(1) driver
-          // transfer, the one shape of action a harness is allowed. The
-          // fold sums in decimal(38,0): a long sum of 64-bit hashes
-          // overflows after a handful of rows, which under ANSI mode
-          // (Spark 4's default) is an ARITHMETIC_OVERFLOW error, not a wrap.
-          val agg = df.select(
-            org.apache.spark.sql.functions.sum(
-              rowHash.cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("h"),
-            org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n"))
-            .head()
-          s"${agg.get(0)}/${agg.getLong(1)}"
-        }
-        catch { case e: Throwable => System.err.println(s"[soak] trial $t $name FAILED: ${e.getMessage}"); "ERR" }
+        try Some(RowFingerprint(fn(spark, sfDir)))
+        catch { case e: Throwable => System.err.println(s"[soak] trial $t $name FAILED: ${e.getMessage}"); None }
         finally Caches.drain()
       digests(name) = digests(name) :+ digest
       times(name) = times(name) :+ (System.nanoTime() - t0) / 1e9
@@ -62,12 +45,12 @@ object Soak {
         println(f"[soak] trial $t/$trials done (${times.values.map(_.last).sum}%.1f s)")
     }
 
-    val errored = names.filter(n => digests(n).contains("ERR"))
+    val errored = names.filter(n => digests(n).contains(None))
     val flaky = names.filter(n => digests(n).distinct.size > 1)
     names.foreach { n =>
       val ts = times(n).sorted
       val median = ts(ts.size / 2)
-      val mark = if (digests(n).contains("ERR")) " ERROR"
+      val mark = if (digests(n).contains(None)) " ERROR"
         else if (digests(n).distinct.size > 1) " FLAKY"
         else ""
       println(f"[soak] $n%-28s median ${median}%7.2f s  (${ts.map(x => f"$x%.2f").mkString(", ")})$mark")

@@ -2,12 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** Contract tests for [[graft.Memo]], the session artifact memo 20+
-  * registered queries now lean on: build-once semantics, counted
-  * artifacts, the strict-frame count memo, and the evictSession release
-  * path (own map entries unpersisted + module hooks invoked). */
+/** Contract tests for [[graft.Memo]], the session artifact memo every
+  * module's shared artifacts live in: build-once semantics, re-entrant
+  * builds, counted and persisted artifacts with failure cleanup, the
+  * strict-frame count memo, and the evictSession release path. */
 class MemoSuite extends SparkSpec {
 
   test("artifact builds once per (session, key) and returns the same instance") {
@@ -51,11 +53,74 @@ class MemoSuite extends SparkSpec {
     Memo.evictSession(spark)
   }
 
-  test("evictSession runs registered module hooks for this session only") {
-    val evicted = new AtomicInteger(0)
-    Memo.onEvict { s => if (s eq spark) evicted.incrementAndGet() }
+  test("a build may resolve another key through Memo; each key builds once") {
+    val outerBuilds = new AtomicInteger(0)
+    val innerBuilds = new AtomicInteger(0)
+    def inner() = Memo.artifact(spark, "memo-suite/inner") {
+      innerBuilds.incrementAndGet()
+      spark.range(3).toDF("v")
+    }
+    def outer() = Memo.artifact(spark, "memo-suite/outer") {
+      outerBuilds.incrementAndGet()
+      (inner(), spark.range(4).toDF("w"))
+    }
+    val (in1, out1) = outer()
+    val (in2, out2) = outer()
+    assert(outerBuilds.get() == 1 && innerBuilds.get() == 1)
+    assert((in1 eq in2) && (out1 eq out2) && (inner() eq in1))
+    assert(innerBuilds.get() == 1, "the inner key must stay memoized on its own")
     Memo.evictSession(spark)
-    assert(evicted.get() == 1)
+  }
+
+  test("a persisting build whose materializing action throws leaves no entry and no cache") {
+    def persistedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val builds = new AtomicInteger(0)
+    @volatile var failing = true
+    def get() = Memo.persisted(spark, "memo-suite/failing") {
+      builds.incrementAndGet()
+      spark.range(20).toDF("v")
+    } { df =>
+      val n = df.count() // fills the cache before the guard fails
+      require(!failing, "memo-suite: guard failed")
+      n
+    }
+    val before = persistedIds
+    intercept[IllegalArgumentException](get())
+    assert(persistedIds.subsetOf(before), "a failed build must unpersist its frame")
+    failing = false
+    val (df, n) = get()
+    assert(builds.get() == 2, "the failed build must not be memoized")
+    assert(n == 20L && df.storageLevel.useMemory)
+    Memo.evictSession(spark)
+  }
+
+  test("evictSession frees the graph, dedup and quantizer artifacts' blocks") {
+    import graft.dedup.DedupQueries
+    import graft.graph.GraphQueries
+    import graft.similarity.SimilarityQueries
+    def persistedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the checkpointed RDDs a truncated artifact's plan reads
+    def checkpointIds(df: DataFrame) =
+      df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    Memo.evictSession(spark)
+    Caches.drain()
+    val before = persistedIds
+    GraphQueries.copurchaseTriangles(spark, Sf0001) // edge + order-basket memos
+    GraphQueries.cappedCustBaskets(spark, Sf0001) // customer-basket memo
+    Caches.drain()
+    val graphIds = persistedIds -- before
+    assert(graphIds.size >= 3, s"expected edge and basket caches, got $graphIds")
+    val artifactIds = Seq(
+      DedupQueries.nearPairsMemo(spark, Sf0001),
+      DedupQueries.dedupComponents(spark, Sf0001), // reads the label artifact
+      SimilarityQueries.trainedCentroidTable(spark, Sf0001),
+      SimilarityQueries.pqCodebookTable(spark, Sf0001)).flatMap(checkpointIds).toSet
+    Caches.drain()
+    assert(artifactIds.size >= 4 && artifactIds.subsetOf(persistedIds),
+      s"expected four live checkpointed artifacts, got $artifactIds")
+    Memo.evictSession(spark)
+    val left = (graphIds ++ artifactIds).intersect(persistedIds)
+    assert(left.isEmpty, s"evictSession left persisted RDDs $left")
   }
 
   test("a memoized artifact is rebuilt after eviction (fresh, correct copy)") {
