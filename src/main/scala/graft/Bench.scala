@@ -86,9 +86,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt.max(1)
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val cpus = Conf.cpus
+    val reps = Conf.env("SPARK_GRAFT_REPS", 5)
+    val spark = GraftSession.builder(cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup outside the timed region, like any JVM benchmark:
     // run every query once at sf0.001 so janino compilation and JIT of each
@@ -98,9 +98,9 @@ object Bench {
     // first-touch codegen for the dedup machinery). Guarded: a broken
     // warmup dir must still produce the JSON result line.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, warmDir).count()
-      catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
+    SparkEntry.registry.foreach { q =>
+      try q.run(spark, warmDir).count()
+      catch { case e: Throwable => System.err.println(s"[bench] warmup ${q.name} failed: ${e.getMessage}") }
       finally Caches.drain()
     }
     // SPARK_GRAFT_MANAGED=1: bench the managed-catalog CBO posture over
@@ -119,15 +119,15 @@ object Bench {
       spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
       System.err.println("[bench] managed-catalog CBO mode: catalog materialized + ANALYZEd")
     }
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val registry = SparkEntry.registry.sortBy(_.name)
+    val names = registry.map(_.name)
     // samples(name): (wall, cpu) of each successful rep; failures(name):
     // count of reps that threw. Reps run round-robin across queries (see
     // scaladoc point 2).
     val samples = collection.mutable.Map.empty[String, Vector[(Double, Double)]].withDefaultValue(Vector.empty)
     val failures = collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    for (r <- 1 to reps; name <- names) {
-      val fn = SparkEntry.queries(name)
-      try samples(name) = samples(name) :+ timed(fn(spark, sfDir).count())
+    for (r <- 1 to reps; SparkEntry.Query(name, run, _) <- registry) {
+      try samples(name) = samples(name) :+ timed(run(spark, sfDir).count())
       catch {
         case e: Throwable =>
           failures(name) += 1

@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * keeper ids) consume it several times WITHIN the plan they return — the
   * persist must outlive the caller's action, so the query function cannot
   * unpersist it itself. Instead it registers the handle here, and the
-  * harness (Verify/Bench/TimeOne, or any long-lived service) calls
+  * harness (Verify/Bench/tools.Time, or any long-lived service) calls
   * [[drain]] once the action completes. Non-blocking unpersist: the data is
   * dead, reclamation need not stall the next query.
   *

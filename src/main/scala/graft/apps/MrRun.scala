@@ -31,8 +31,7 @@ object MrRun {
       else apps.getOrElse(app,
         throw new IllegalArgumentException(s"unknown app '$app'; have ${apps.keys.mkString(",")} or plugin:<FQCN>"))
     val job = if (args.length > 3) base.withNReduce(args(3).toInt) else base
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).appName(s"mr-$app").getOrCreate()
+    val spark = GraftSession.builder(graft.Conf.cpus.toString).appName(s"mr-$app").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     job.runToText(spark, glob, outDir)
     spark.stop()

@@ -367,77 +367,6 @@ object CorpusStats {
        |  CAST(count(*) OVER (PARTITION BY cluster) AS BIGINT) AS cluster_size
        |FROM full_lab""".stripMargin
 
-  /** Exact two-sample Kolmogorov–Smirnov test between the older and newer
-    * corpus halves (doc_id midpoint split, [[oovRate]]'s frame) on the
-    * document-length distribution — the classic distribution-drift test to
-    * put NEXT to the binned PSI ([[graft.pipelines.DataSelection
-    * .corpusDriftPsi]]): KS is binning-free and localizes WHERE the CDFs
-    * split (`at_value`), which a 10-bin PSI cannot.
-    *
-    * Exactness: D = max_v |F₁(v) − F₂(v)| is computed on the integer
-    * lattice — the statistic is `max |cum₁·n₂ − cum₂·n₁|` over distinct
-    * lengths (one cross-multiplied window pass), divided ONCE into ppm.
-    * The α = 0.05 rejection bound `1.358·√((n₁+n₂)/(n₁·n₂))` involves the
-    * only float (one sqrt — IEEE-identical both engines) and is snapped to
-    * ppm before the compare.
-    *
-    * Scale shape: the corpus collapses to the distinct-length histogram
-    * with two conditional sums; the cumulative window and the argmax run
-    * over distinct lengths only. Output is ONE row. */
-  def corpusKsTest(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val n = docs.agg(count(lit(1)).as("n_docs_total"))
-    val hist = docs.crossJoin(broadcast(n))
-      .select(col("n_chars").as("v"), expr("doc_id * 2 div n_docs_total").as("half"))
-      .groupBy(col("v"))
-      .agg(sum(when(col("half") === 0, 1L).otherwise(0L)).as("c0"),
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"))
-    val wCum = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    hist
-      .withColumn("cum0", sum(col("c0")).over(wCum))
-      .withColumn("cum1", sum(col("c1")).over(wCum))
-      .withColumn("n0", sum(col("c0")).over(wAll))
-      .withColumn("n1", sum(col("c1")).over(wAll))
-      .withColumn("gap", abs(col("cum0") * col("n1") - col("cum1") * col("n0")))
-      .groupBy(col("n0"), col("n1"))
-      .agg(max(struct(col("gap"), (-col("v")).as("negv"))).as("m"))
-      .select(col("n0").as("n_old"), col("n1").as("n_new"),
-        expr("m.gap * 1000000 div (n0 * n1)").as("d_ppm"),
-        (-col("m.negv")).as("at_value"),
-        expr("CAST(round(1.358 * sqrt(CAST(n0 + n1 AS DOUBLE) / (CAST(n0 AS DOUBLE) * n1)) * 1000000.0) AS BIGINT)")
-          .as("crit_ppm"))
-      .withColumn("reject", (col("d_ppm") > col("crit_ppm")).cast("boolean"))
-  }
-
-  def corpusKsTestSql: String =
-    """WITH n AS (SELECT count(*) AS n_docs_total FROM documents),
-      |h AS (
-      |  SELECT n_chars AS v,
-      |    CAST(sum(CASE WHEN doc_id * 2 // n_docs_total = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
-      |    CAST(sum(CASE WHEN doc_id * 2 // n_docs_total = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1
-      |  FROM documents, n GROUP BY n_chars),
-      |c AS (
-      |  SELECT v,
-      |    CAST(sum(c0) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum0,
-      |    CAST(sum(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum1,
-      |    CAST(sum(c0) OVER () AS BIGINT) AS n0,
-      |    CAST(sum(c1) OVER () AS BIGINT) AS n1
-      |  FROM h),
-      |g AS (SELECT *, abs(cum0 * n1 - cum1 * n0) AS gap FROM c),
-      |m AS (
-      |  SELECT n0 AS n_old, n1 AS n_new, gap, v
-      |  FROM g ORDER BY gap DESC, v ASC LIMIT 1)
-      |SELECT n_old, n_new,
-      |  gap * 1000000 // (n_old * n_new) AS d_ppm,
-      |  v AS at_value,
-      |  CAST(round(1.358 * sqrt(CAST(n_old + n_new AS DOUBLE) / (CAST(n_old AS DOUBLE) * n_new)) * 1000000.0) AS BIGINT) AS crit_ppm,
-      |  gap * 1000000 // (n_old * n_new)
-      |    > CAST(round(1.358 * sqrt(CAST(n_old + n_new AS DOUBLE) / (CAST(n_old AS DOUBLE) * n_new)) * 1000000.0) AS BIGINT) AS reject
-      |FROM m""".stripMargin
-
   /** Per-source distinctive vocabulary: for each source, the top-5 terms by
     * the Dirichlet-smoothed log-odds z² of "this source vs the rest of the
     * corpus" (Monroe, Colaresi & Quinn 2008) — the informed prior keeps a

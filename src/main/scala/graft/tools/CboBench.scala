@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.{Caches, Memo, SparkEntry, Tables}
+import graft.{Caches, Conf, Memo, SparkEntry, Tables}
 import graft.plans.GraftSession
 
 /** Bench variant that runs the REGISTERED multi-join queries in
@@ -126,10 +126,10 @@ object CboBench {
   private def runMode(spark: SparkSession, sfDir: String, probes: Seq[String],
                       reps: Int, mode: String): Map[String, ModeRun] = {
     val order = probes.map { n =>
-      n -> leafOrder(SparkEntry.queries(n)(spark, sfDir))
+      n -> leafOrder(SparkEntry.query(n).run(spark, sfDir))
     }.toMap
     val fp = probes.map { n =>
-      val f = RowFingerprint(SparkEntry.queries(n)(spark, sfDir))
+      val f = RowFingerprint(SparkEntry.query(n).run(spark, sfDir))
       Caches.drain()
       n -> f
     }.toMap
@@ -138,7 +138,7 @@ object CboBench {
     val stable = collection.mutable.Map.empty[String, Boolean].withDefaultValue(true)
     for (r <- 1 to reps; n <- probes) {
       val t0 = System.nanoTime()
-      val f = RowFingerprint(SparkEntry.queries(n)(spark, sfDir))
+      val f = RowFingerprint(SparkEntry.query(n).run(spark, sfDir))
       walls(n) = walls(n) :+ (System.nanoTime() - t0) / 1e9
       if (f != fp(n)) stable(n) = false
       Caches.drain()
@@ -150,12 +150,12 @@ object CboBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val artifact = args.lift(2).getOrElse("BENCH_CBO.json")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_CBO_REPS", "3").toInt.max(1)
+    val reps = Conf.env("SPARK_GRAFT_CBO_REPS", 3)
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")).getOrCreate()
+    val spark = GraftSession.builder(Conf.cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val probes = args.lift(1)
-      .map(_.split(',').toSeq.map(_.trim).filter(SparkEntry.queries.contains))
+      .map(_.split(',').toSeq.map(n => SparkEntry.query(n.trim).name))
       .filter(_.nonEmpty)
       .getOrElse {
         val counter = new JobCounter
@@ -171,7 +171,7 @@ object CboBench {
         // CboBench must OWN its SparkSession for the whole run; never point
         // it at a session shared with Verify/Bench/a live shell, or their
         // memo-dependent invariants (and walls) silently break.
-        val admitted = SparkEntry.queries.keys.toSeq.sorted.filter { n =>
+        val admitted = SparkEntry.registry.map(_.name).sorted.filter { n =>
           // evict memos so classification is order-independent: a memo
           // HIT would make an artifact consumer look construction-clean
           // just because an earlier candidate built the artifact
@@ -179,7 +179,7 @@ object CboBench {
           Caches.drain()
           val before = syncedJobs(spark, counter)
           try {
-            val jc = joinCount(SparkEntry.queries(n)(spark, warmDir))
+            val jc = joinCount(SparkEntry.query(n).run(spark, warmDir))
             val jobs = syncedJobs(spark, counter) - before
             if (jobs > 0) {
               System.err.println(s"[cbobench] exclude $n: $jobs construction job(s) — artifact build or driver-side iteration")

@@ -16,10 +16,10 @@ object DumpOne {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: DumpOne <query> [sfDir]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")).getOrCreate()
+    val query = SparkEntry.query(name)
+    val spark = GraftSession.builder(graft.Conf.cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val df = fn(spark, sfDir)
+    val df = query.run(spark, sfDir)
     val cols = df.columns.sorted
     val out = java.nio.file.Files.createTempDirectory("dumpone").toString
     df.select(cols.head, cols.tail: _*)

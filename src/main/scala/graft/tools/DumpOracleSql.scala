@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkEntry
+import graft.{SparkEntry, Verify}
 
 /** Dev harness: write SparkEntry.oracleSql as JSON without a Spark session,
   * for tools/spotcheck.py's targeted DuckDB diff. Not part of the driver
@@ -10,17 +10,6 @@ import graft.SparkEntry
 object DumpOracleSql {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/oracle_sql.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    Files.writeString(Paths.get(out),
-      SparkEntry.oracleSql.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-        .mkString("{", ",", "}"))
+    Files.writeString(Paths.get(out), Verify.jsonObject(SparkEntry.oracleSql))
   }
 }

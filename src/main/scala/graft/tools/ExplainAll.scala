@@ -12,12 +12,12 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
-    val spark = GraftSession.builder("4").getOrCreate()
+    val spark = GraftSession.builder(graft.Conf.cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      sb ++= s"\n===== $name =====\n"
-      try sb ++= fn(spark, sfDir).queryExecution.explainString(
+    SparkEntry.registry.sortBy(_.name).foreach { q =>
+      sb ++= s"\n===== ${q.name} =====\n"
+      try sb ++= q.run(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       catch { case e: Throwable => sb ++= s"ERROR: ${e.getMessage}\n" }
     }

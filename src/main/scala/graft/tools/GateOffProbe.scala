@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{Caches, Memo, Plans, SparkEntry}
+import graft.{Caches, Conf, Memo, Plans, SparkEntry}
 import graft.plans.GraftSession
 
 /** End-to-end execution of the size-gated SHUFFLED-HASH fallback paths at
@@ -92,14 +92,14 @@ object GateOffProbe {
       .map(_.split(',').toSeq.map(_.trim).filter(Probes.contains))
       .filter(_.nonEmpty)
       .getOrElse(Probes)
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")).getOrCreate()
+    val spark = GraftSession.builder(Conf.cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val dir = s"$outBase/k$k"
     ScaleProbe.replicate(spark, sfDir, k, dir)
     replicateRelational(spark, sfDir, k, dir)
     var mismatches = 0
     probes.foreach { name =>
-      val fn = SparkEntry.queries(name)
+      val fn = SparkEntry.query(name).run
       // gated-on (broadcast) pass — also warms the session artifacts
       // (trained models, edge memos), which both passes share; the probe
       // measures the JOIN STRATEGY delta, not artifact build cost

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Caches, SparkEntry}
+import graft.{Caches, Conf, SparkEntry}
 import graft.plans.GraftSession
 
 /** Empirical scaling probe for the expensive operators: replicate the
@@ -150,14 +150,14 @@ object ScaleProbe {
       .map(_.split(',').toSeq.map(_.trim).filter(Probes.contains))
       .filter(_.nonEmpty)
       .getOrElse(Probes)
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")).getOrCreate()
+    val spark = GraftSession.builder(Conf.cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val ks = Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxK).toSeq
     ks.foreach { k =>
       val dir = s"$outBase/k$k"
       replicate(spark, sfDir, k, dir)
       probes.foreach { name =>
-        val fn = SparkEntry.queries(name)
+        val fn = SparkEntry.query(name).run
         fn(spark, dir).count() // warm (codegen/JIT for this plan shape)
         Caches.drain()
         val t0 = System.nanoTime()

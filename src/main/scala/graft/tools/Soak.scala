@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Caches, SparkEntry}
+import graft.{Caches, Conf, SparkEntry}
 import graft.plans.GraftSession
 
 /** Soak/repetition harness — the analog of the reference's
@@ -22,21 +22,21 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val trials = args.headOption.map(_.toInt).getOrElse(3)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+    val spark = GraftSession.builder(Conf.cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // per query: (rows, fingerprint) per trial (None = the trial failed)
     // + wall seconds per trial
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val registry = SparkEntry.registry.sortBy(_.name)
+    val names = registry.map(_.name)
     val digests = collection.mutable.Map.empty[String, Vector[Option[(Long, Long)]]]
       .withDefaultValue(Vector.empty)
     val times = collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
 
-    for (t <- 1 to trials; name <- names) {
-      val fn = SparkEntry.queries(name)
+    for (t <- 1 to trials; SparkEntry.Query(name, run, _) <- registry) {
       val t0 = System.nanoTime()
       val digest =
-        try Some(RowFingerprint(fn(spark, sfDir)))
+        try Some(RowFingerprint(run(spark, sfDir)))
         catch { case e: Throwable => System.err.println(s"[soak] trial $t $name FAILED: ${e.getMessage}"); None }
         finally Caches.drain()
       digests(name) = digests(name) :+ digest

@@ -36,4 +36,13 @@ class ConfSuite extends SparkSpec {
         s"$key: message does not name the key and value: ${e.getMessage}")
     }
   }
+
+  test("an environment setting that is not a positive integer fails naming the setting") {
+    assert(Conf.positiveInt("SPARK_GRAFT_CPUS", None, 4) == 4)
+    assert(Conf.positiveInt("SPARK_GRAFT_REPS", Some("7"), 5) == 7)
+    for (name <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_REPS"); bad <- Seq("abc", "0", "-2")) {
+      val e = intercept[IllegalArgumentException](Conf.positiveInt(name, Some(bad), 4))
+      assert(e.getMessage == s"$name must be a positive integer, got '$bad'")
+    }
+  }
 }

@@ -32,10 +32,19 @@ class PlanQualitySuite extends SparkSpec {
   }
 
   test("every registered query has an oracle (driver records only a weak rows-check without one)") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size, s"duplicate query names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle SQL: ${missing.toSeq.sorted}")
     val orphaned = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphaned.isEmpty, s"oracle SQL without a query: ${orphaned.toSeq.sorted}")
+  }
+
+  test("an unknown query name fails with a message naming it") {
+    val e = intercept[NoSuchElementException](SparkEntry.query("no_such_query"))
+    assert(e.getMessage.contains("no_such_query"))
   }
 
   test("no registered query emits nested columns (driver compare crashes on unhashable cells)") {
