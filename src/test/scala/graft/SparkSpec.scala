@@ -12,9 +12,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Smallest driver-testdata scale: t1-smoke sized. */
   val Sf0001 = "/root/testdata/sf0.001"
-
-  /** The reference's own test corpus (read-only). */
-  val PgGlob = "/root/reference/src/main/pg-*.txt"
 }
 
 object SparkSpec {
