@@ -95,7 +95,12 @@ object Bench {
     // plan shape happen before timing starts — otherwise whichever query
     // runs first absorbs the session's whole cold-start cost (r3:
     // corpus_pipeline at position 2 measured 28 s of which ~20 s was
-    // first-touch codegen for the dedup machinery). Guarded: a broken
+    // first-touch codegen for the dedup machinery). The compiled classes
+    // reach the timed reps only because GraftSession sizes Spark's codegen
+    // cache above the registry's census (3,175 classes for this warm-up
+    // plus one sf0.1 pass; 160 of them new at sf0.1). Under Spark's
+    // default 100 entries the round-robin reps evicted nearly all of them
+    // and recompiled every query's code in every rep. Guarded: a broken
     // warmup dir must still produce the JSON result line.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     SparkEntry.registry.foreach { q =>

@@ -46,6 +46,19 @@ object GraftSession {
       // lives here and not next to the loop.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
+      // Spark keeps compiled whole-stage and expression classes in an LRU
+      // keyed by the generated source; at its default of 100 entries a
+      // session that cycles through more plans than that recompiles them
+      // with Janino (and the JIT compiles them again) on every pass.
+      // Census (2026-10-18, 4 cores, cache unbounded): one session running
+      // the registry once at sf0.001 and once at sf0.1, as graft.Bench
+      // does, compiled 3,175 distinct classes (3,015 + 160). 8,000 is
+      // about 2.5× that: room for the classes a warm pass compiles anew
+      // (up to ~110 at sf0.01) across Bench's reps, and for registry
+      // growth. After that census the full cache retains +24 MB metaspace
+      // and +91 MB heap over the 100-entry bound (SCALING.md). Static
+      // conf: only a builder can set it.
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
       // Streaming state store backend. The default HDFS-backed provider
       // keeps ALL state on-heap — fine for the bounded per-key state the
       // streaming family maintains at test scale, but the 100× deployment

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
 import graft.{Caches, Conf, SparkEntry}
@@ -27,6 +28,10 @@ import graft.plans.GraftSession
   *     shows up here, nowhere else.
   *   - `idle_core_ms` — wall·cores − Σrun: core time the query left unused
   *     (scheduler delay, under-parallelism, external theft).
+  *   - `compiles` — Janino compilations during the rep (CodegenMetrics).
+  *     After the untimed run this should be 0: a nonzero count means the
+  *     rep paid for generated code again (codegen cache too small, or
+  *     source text that differs run to run).
   * At the end it prints min/median wall per query, then every completed
   * stage of each query's last rep: tasks, Σrun, Σcpu, input bytes, shuffle
   * read/write bytes.
@@ -110,6 +115,7 @@ object Time {
     }
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
     def driverGcMs(): Long = gcBeans.map(_.getCollectionTime).sum
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     queries.foreach { q =>
       try q.run(spark, sfDir).count()
@@ -118,22 +124,24 @@ object Time {
     }
     println(s"[time] ${queries.size} queries x $reps reps on $sfDir (local[$cpus])")
     println(f"[time] ${"rep"}%3s ${"query"}%-28s ${"wall_s"}%7s ${"rows"}%10s ${"tasks"}%6s ${"run_ms"}%9s " +
-      f"${"cpu_s"}%7s ${"gc_ms"}%7s ${"drvgc_ms"}%8s ${"fetch_ms"}%8s ${"idle_core_ms"}%12s")
+      f"${"cpu_s"}%7s ${"gc_ms"}%7s ${"drvgc_ms"}%8s ${"fetch_ms"}%8s ${"idle_core_ms"}%12s ${"compiles"}%8s")
     val walls = collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
     for (r <- 1 to reps; q <- queries) {
       val group = s"${q.name}/$r"
       val gc0 = driverGcMs()
+      val c0 = compiles()
       val t0 = System.nanoTime()
       val rows = inGroup(group)(q.run(spark, sfDir).count())
       val wall = (System.nanoTime() - t0) / 1e9
       val drvGc = driverGcMs() - gc0
+      val compiled = compiles() - c0
       Caches.drain()
       flush(s"flush/$group")
       walls(q.name) :+= wall
       val a = listener.rep(group)
       val idle = (wall * 1000 * cpus).toLong - a.runMs
       println(f"[time] $r%3d ${q.name}%-28s $wall%7.2f $rows%10d ${a.tasks}%6d ${a.runMs}%9d " +
-        f"${a.cpuNs / 1e9}%7.2f ${a.gcMs}%7d $drvGc%8d ${a.fetchMs}%8d $idle%12d")
+        f"${a.cpuNs / 1e9}%7.2f ${a.gcMs}%7d $drvGc%8d ${a.fetchMs}%8d $idle%12d $compiled%8d")
     }
     queries.foreach { q =>
       val ws = walls(q.name)

@@ -8,7 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.DedupQueries
-import graft.plans.GraftExtensions
+import graft.plans.GraftSession
 import graft.streaming.KvUpsert
 
 /** Executor-LOSS chaos tests — the engine-level analog of the reference
@@ -50,15 +50,11 @@ class ExecutorLossSuite extends AnyFunSuite with BeforeAndAfterAll {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    spark = SparkSession.builder()
+    spark = GraftSession.builder("4")
       .master("local-cluster[2,2,1536]")
       .appName("graft-executor-loss")
-      .withExtensions(new GraftExtensions)
       .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
       .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.setCheckpointDir(
