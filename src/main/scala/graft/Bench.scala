@@ -108,22 +108,6 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] warmup ${q.name} failed: ${e.getMessage}") }
       finally Caches.drain()
     }
-    // SPARK_GRAFT_MANAGED=1: bench the managed-catalog CBO posture over
-    // the FULL registry (same Verify plumbing and artifact format —
-    // BENCH_CBO covers the multi-join probes with plan diffs; this gives
-    // the registry-wide wall-clock number for the same posture).
-    // Materialized AFTER the raw-path warmup: the one-time ANALYZE cost
-    // stays outside the timed region, and warmDir loads keep routing raw
-    // (the managed confs are per-dir), which is fine — they only exist to
-    // warm janino/JIT. The compact line carries mode:"managed" so the two
-    // artifact families can never be confused in a diff.
-    val managed = sys.env.get("SPARK_GRAFT_MANAGED").contains("1")
-    if (managed) {
-      Tables.materializeCatalog(spark, sfDir, "graft_bench_managed")
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      System.err.println("[bench] managed-catalog CBO mode: catalog materialized + ANALYZEd")
-    }
     val registry = SparkEntry.registry.sortBy(_.name)
     val names = registry.map(_.name)
     // samples(name): (wall, cpu) of each successful rep; failures(name):
@@ -190,7 +174,6 @@ object Bench {
           shown.map { case (n, c) => n -> c.toString } ++
           (if (rest.nonEmpty) Seq("_more" -> rest.size.toString) else Nil)))
       } else Nil) ++
-      (if (managed) Seq("mode" -> "\"managed\"") else Nil) ++
       // "sf" is NUMERIC per the driver contract ({"sf": 0.1, ...}); the
       // r01–r15 lines carried the data dir string here, which a schema-
       // checking parser would reject. The dir moves to "sf_dir".
@@ -236,7 +219,9 @@ object Bench {
     // head of the query set were unrecoverable from the truncated tail).
     val full = obj(Seq(
       "metric" -> "\"bench_full\"",
-      "mode" -> (if (managed) "\"managed\"" else "\"raw\""),
+      // raw parquet is the only posture; the key stays so every round's
+      // artifact has the same key set
+      "mode" -> "\"raw\"",
       "sf" -> ("\"" + sfDir + "\""),
       "reps" -> reps.toString,
       "total_sec" -> fmt(total, 3),
@@ -247,14 +232,12 @@ object Bench {
       "reps_wall" -> obj(names.map(n => n -> samples(n).map(s => fmt(s._1, 3)).mkString("[", ",", "]"))),
       "reps_cpu" -> obj(names.map(n => n -> samples(n).map(s => fmt(s._2, 3)).mkString("[", ",", "]"))),
       "errors" -> obj(failures.toSeq.sortBy(_._1).map { case (n, c) => n -> c.toString })))
-    // managed runs get their own artifact: the raw BENCH_FULL.json is the
-    // driver's diff baseline and must never be clobbered by a posture run
-    // …and a per-core-count snapshot next to it: the driver runs the bench
-    // at TWO core counts in one round, and r15's 8-core run clobbered the
-    // 32-core full artifact (the r15 32c per-query mins are gone). The
-    // unsuffixed name stays the diff baseline; the suffixed one survives.
-    val fullPath = if (managed) "BENCH_FULL_MANAGED.json" else "BENCH_FULL.json"
-    for (p <- Seq(fullPath, fullPath.stripSuffix(".json") + s"_c$cpus.json")) {
+    // Written twice: the unsuffixed file and a per-core-count snapshot next
+    // to it. The bench runs at TWO core counts in one round, and r15's
+    // 8-core run clobbered the 32-core full artifact (the r15 32c
+    // per-query mins are gone). The unsuffixed name stays the diff
+    // baseline; the suffixed one survives.
+    for (p <- Seq("BENCH_FULL.json", s"BENCH_FULL_c$cpus.json")) {
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), full + "\n")
       catch { case e: Throwable => System.err.println(s"[bench] $p write failed: ${e.getMessage}") }
     }

@@ -42,21 +42,8 @@ object Plans {
     * `df` as the hash side — only the exchange strategy changes, so
     * results are identical by construction. */
   def broadcastIfSmall(df: DataFrame, estRows: Long): DataFrame =
-    if (statsTrusted(df.sparkSession)) df
-    else if (estRows <= broadcastRowLimit(df)) broadcast(df)
+    if (estRows <= broadcastRowLimit(df)) broadcast(df)
     else df.hint("shuffle_hash")
-
-  /** True when the session runs in managed-catalog mode
-    * ([[Tables.materializeCatalog]]) WITH the cost-based optimizer on. The
-    * gates then stand down entirely — no hint at all: every join hint in
-    * Catalyst excludes its join from `CostBasedJoinReorder`, so in a
-    * warehouse session with real ANALYZE statistics the hints would
-    * silence the optimizer that finally has the evidence to out-plan
-    * them. Hints are the NO-stats fallback, not a override of better
-    * information. */
-  def statsTrusted(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption(Tables.ManagedDbKey).isDefined &&
-      spark.conf.get("spark.sql.cbo.enabled", "false").toBoolean
 
   /** Conf key for the byte-estimate threshold used by [[broadcastIfSmallStats]]. */
   val BroadcastByteLimitKey = "spark.graft.broadcastByteLimit"
@@ -90,8 +77,7 @@ object Plans {
     * so a flipped `spark.graft.broadcastByteLimit` test conf never sees a
     * stale verdict. Pass no key to keep the uncached behavior. */
   def broadcastIfSmallStats(df: DataFrame, cacheKey: String = null): DataFrame =
-    if (statsTrusted(df.sparkSession)) df
-    else if (statsFitsBroadcast(df, cacheKey)) broadcast(df)
+    if (statsFitsBroadcast(df, cacheKey)) broadcast(df)
     else df.hint("shuffle_hash")
 
   /** The [[broadcastIfSmallStats]] decision alone — reusable for a frame

@@ -12,45 +12,25 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
 
-  /** Opt-in managed-catalog mode: when `spark.graft.managedDb` names a
-    * database AND `spark.graft.managedDir` equals the requested data dir,
-    * loaders resolve `db.name` catalog tables (written + ANALYZEd by
-    * [[materializeCatalog]]) instead of raw parquet paths. The catalog
-    * carries real row counts and column histograms, so Catalyst's CBO can
-    * size joins and reorder join chains — the deployment posture of a real
-    * warehouse, where facts live as ANALYZEd tables, not loose files.
-    * Off by default: the raw-path mode needs zero setup and is what the
-    * driver's Verify/Bench run. */
-  val ManagedDbKey = "spark.graft.managedDb"
-  val ManagedDirKey = "spark.graft.managedDir"
-
-  def managedDb(spark: SparkSession, dir: String): Option[String] =
-    spark.conf.getOption(ManagedDbKey)
-      .filter(_ => spark.conf.getOption(ManagedDirKey).contains(dir))
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    managedDb(spark, dir) match {
-      case Some(db) => spark.table(s"$db.$name")
-      case None =>
-        // Schema memo: a bare `spark.read.parquet(path)` runs a footer-
-        // inference JOB on every call — one tiny job per table load, paid
-        // by every construction of every query (q5 alone loads 4 tables).
-        // Infer once per (session, path, freshness token) and pass the
-        // schema explicitly; this also lets tools distinguish real
-        // artifact-build jobs from plumbing (CboBench's probe classifier
-        // counts construction jobs). The freshness token (mtime + size of
-        // the path and its immediate children — a driver-side stat, never
-        // a Spark job) invalidates the memo if a tool rewrites a testdata
-        // file mid-session (regeneration, schema evolution): a stale entry
-        // would otherwise silently read with the old schema.
-        val path = s"$dir/$name.parquet"
-        val token = freshnessToken(path)
-        schemaCache.keySet.removeIf(k => k._1.sparkContext.isStopped ||
-          (k._1 == spark && k._2 == path && k._3 != token))
-        val schema = schemaCache.computeIfAbsent((spark, path, token),
-          _ => spark.read.parquet(path).schema)
-        spark.read.schema(schema).parquet(path)
-    }
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // Schema memo: a bare `spark.read.parquet(path)` runs a footer-
+    // inference JOB on every call — one tiny job per table load, paid by
+    // every construction of every query (q5 alone loads 4 tables). Infer
+    // once per (session, path, freshness token) and pass the schema
+    // explicitly, so constructing a query launches no plumbing jobs. The
+    // freshness token (mtime + size of the path and its immediate
+    // children — a driver-side stat, never a Spark job) invalidates the
+    // memo if a tool rewrites a testdata file mid-session (regeneration,
+    // schema evolution): a stale entry would otherwise silently read with
+    // the old schema.
+    val path = s"$dir/$name.parquet"
+    val token = freshnessToken(path)
+    schemaCache.keySet.removeIf(k => k._1.sparkContext.isStopped ||
+      (k._1 == spark && k._2 == path && k._3 != token))
+    val schema = schemaCache.computeIfAbsent((spark, path, token),
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Cheap change detector for a local parquet path (file or directory of
     * part files): folds name/size/mtime of the path and its direct
@@ -69,56 +49,6 @@ object Tables {
 
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Long), org.apache.spark.sql.types.StructType]
-
-  /** One-time setup for managed-catalog mode: copy every testdata table
-    * into `db` as a managed table, compute table-level statistics for all
-    * of them, and column statistics for every atomic column (array/map
-    * columns — embeddings' vector — are not ANALYZE-able and don't join
-    * anyway). Events are saved ALREADY ts-normalized so the catalog read
-    * path is byte-identical to the raw read path. Sets the two session
-    * confs so subsequent loaders for `dir` route through the catalog. */
-  def materializeCatalog(spark: SparkSession, dir: String, db: String = "graft_managed"): Unit = {
-    // a crashed prior run can leave table directories under the warehouse
-    // with no entry in this JVM's (in-memory) catalog — saveAsTable then
-    // fails LOCATION_ALREADY_EXISTS. Drop both the catalog db and any
-    // orphaned location before rebuilding.
-    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    val warehouse = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"$db.db")
-    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(warehouse)) fs.delete(warehouse, true)
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val all = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    all.foreach { t =>
-      // read the RAW path explicitly: a re-run with the confs already set
-      // must not try to overwrite a catalog table from itself
-      val raw = spark.read.parquet(s"$dir/$t.parquet")
-      val df = if (t == "events") normalizeEventsTs(raw) else raw
-      df.write.mode("overwrite").saveAsTable(s"$db.$t")
-      val atomic = spark.table(s"$db.$t").schema.fields
-        .filterNot(f => f.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType => true
-          case _: org.apache.spark.sql.types.MapType => true
-          case _: org.apache.spark.sql.types.StructType => true
-          case org.apache.spark.sql.types.BinaryType => true
-          // Spark 4.1's CBO estimation MatchErrors on TIMESTAMP_NTZ
-          // column stats (FilterEstimation's literal ranges don't cover
-          // the type); leave those columns stats-less — the estimator
-          // then falls back to default selectivity instead of crashing
-          case org.apache.spark.sql.types.TimestampNTZType => true
-          case _ => false
-        })
-        .map(_.name)
-      if (atomic.nonEmpty)
-        spark.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR COLUMNS ${atomic.mkString(", ")}")
-      else
-        spark.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS")
-    }
-    spark.conf.set(ManagedDbKey, db)
-    spark.conf.set(ManagedDirKey, dir)
-  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")

@@ -3,8 +3,11 @@ import java.nio.file.{Files, Paths}
 
 import graft.plans.GraftSession
 
-/** Driver-run correctness dump: each registered query's result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump, `graft.Verify <sfDir> <outDir> [q1,q2,…]`: each
+  * registered query's result → parquet, plus oracle_sql.json, for a DuckDB
+  * oracle compare (`tools/oracle_check.py`). The optional third argument
+  * limits the dump, oracle_sql.json and the summary line to the named
+  * queries; with two arguments every registered query is dumped. */
 object Verify {
 
   /** `{"k": "v",…}` with every key and value a JSON string. Escapes
@@ -24,33 +27,30 @@ object Verify {
     entries.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 
+  /** The queries one run dumps: the whole registry, or the comma-separated
+    * names in `only`, each resolved through [[SparkEntry.query]] — an
+    * unknown name throws `unknown query: <name>`. */
+  def selected(only: Option[String]): Seq[SparkEntry.Query] =
+    only.fold(SparkEntry.registry)(_.split(',').toSeq.distinct.map(SparkEntry.query))
+
   def main(args: Array[String]): Unit = {
-    if (args.length != 2) {
-      System.err.println("usage: graft.Verify <sfDir> <outDir>")
+    if (args.length != 2 && args.length != 3) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [q1,q2,...]")
       sys.exit(2)
     }
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) = (args(0), args(1))
+    // resolved before the session starts: a typo fails in milliseconds
+    val queries = selected(args.lift(2))
     val spark = GraftSession.builder(Conf.cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_MANAGED=1: run the WHOLE registry in managed-catalog CBO
-    // mode (ANALYZEd tables + cost-based optimizer + join-reorder, the
-    // gates standing down via Plans.statsTrusted) — the correctness half
-    // of the CBO posture: the dump this produces must oracle-match
-    // registry-wide, not just on CboBench's multi-join probe subset.
-    if (sys.env.get("SPARK_GRAFT_MANAGED").contains("1")) {
-      Tables.materializeCatalog(spark, sfDir, "graft_verify")
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      System.err.println("[verify] managed-catalog CBO mode ON (graft_verify)")
-    }
     new java.io.File(outDir).mkdirs()
     // Capture every failure as data, not just a log line: a query that
     // throws at analysis time produces no parquet dir, and a dump-dir-driven
     // compare would silently OMIT it (round 8's 18-query outage looked like
     // a clean 92-green artifact). errors.json keeps the invariant
-    // |dumped| + |errors| == |SparkEntry.registry| auditable.
+    // |dumped| + |errors| == |queries| auditable.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.registry.foreach { case SparkEntry.Query(name, run, _) =>
+    queries.foreach { case SparkEntry.Query(name, run, _) =>
       try run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -60,12 +60,12 @@ object Verify {
       }
       finally Caches.drain()
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObject(SparkEntry.oracleSql))
+    val names = queries.map(_.name).toSet
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObject(SparkEntry.oracleSql.filter { case (n, _) => names(n) }))
     Files.writeString(Paths.get(s"$outDir/errors.json"), jsonObject(errors))
-    val n = SparkEntry.registry.size
+    val n = queries.size
     System.err.println(s"[verify-summary] ${n - errors.size}/$n dumped, ${errors.size} failed")
-    if (sys.env.get("SPARK_GRAFT_MANAGED").contains("1"))
-      spark.sql("DROP DATABASE IF EXISTS graft_verify CASCADE")
     spark.stop()
   }
 }

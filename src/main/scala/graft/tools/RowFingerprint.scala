@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Order-free, duplicate-sensitive row fingerprint shared by the probe
-  * and soak tools (GateOffProbe, CboBench, Soak): (row count, Σ crc32(canonical row
+  * and soak tools (GateOffProbe, Soak): (row count, Σ crc32(canonical row
   * string)), computed with no driver-side row materialization — the
   * library's no-collect rule applies to tools too. Both compared runs
   * execute the same final projection, so identical values imply identical
@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *    the probes exist to catch. Decoding <len>:<value> left-to-right is
   *    unambiguous for every value alphabet (digits then ':' then exactly
   *    len chars), so distinct rows encode to distinct strings.
-  * (An earlier CboBench copy coalesced NULL to a bare " " and joined on
-  * '|'; both holes are closed here in the one shared helper.) */
+  * (An earlier copy coalesced NULL to a bare " " and joined on '|'; both
+  * holes are closed here in the one shared helper.) */
 object RowFingerprint {
   def apply(df: DataFrame): (Long, Long) = {
     val cols = df.columns.sorted

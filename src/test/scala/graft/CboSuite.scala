@@ -85,80 +85,6 @@ class CboSuite extends SparkSpec {
     }
   }
 
-  test("managed-catalog mode: a REGISTRY query reorders under CBO, result identical") {
-    // The fixture test above proves the ANALYZE→reorder mechanism on
-    // managed copies; this one proves the REGISTERED query path: in
-    // managed-catalog mode (Tables.materializeCatalog + cbo on) the
-    // loaders resolve ANALYZEd catalog tables, the size-gate hints stand
-    // down (Plans.statsTrusted — hints exclude joins from
-    // CostBasedJoinReorder), and q5's dimension chain must re-sequence
-    // while producing byte-identical rows.
-    def leafCols(df: DataFrame): Seq[String] =
-      df.queryExecution.optimizedPlan.collectLeaves()
-        .map(_.output.headOption.map(_.name).getOrElse("?"))
-    def q5() = graft.relational.RelationalQueries.q5NationRevenue(spark, Sf0001)
-    val rawOrder = leafCols(q5())
-    val rawRows = q5().collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    val cboConfs = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val saved = cboConfs.map(k => k -> spark.conf.getOption(k))
-    try {
-      Tables.materializeCatalog(spark, Sf0001, "graft_cbo_reg")
-      cboConfs.foreach(spark.conf.set(_, "true"))
-      assert(graft.Plans.statsTrusted(spark), "managed mode did not arm statsTrusted")
-      val cboOrder = leafCols(q5())
-      assert(cboOrder != rawOrder,
-        s"registry q5 did not reorder under managed-catalog CBO: $cboOrder")
-      val cboRows = q5().collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      assert(cboRows == rawRows, "managed-catalog q5 changed the result")
-    } finally {
-      spark.conf.unset(Tables.ManagedDbKey)
-      spark.conf.unset(Tables.ManagedDirKey)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-      spark.sql("DROP DATABASE IF EXISTS graft_cbo_reg CASCADE")
-    }
-  }
-
-  test("managed-catalog mode: q3 and q7 registry chains also reorder, results identical") {
-    // Widens the single-query witness above to the other registry shapes
-    // that re-sequence at this scale (CboBench at sf0.001: q3, q5, q7
-    // REORDERED, 0 fingerprint mismatches across all 34 multi-join
-    // probes): q3's customer⋈orders⋈lineitem chain and q7's
-    // nation⋈nation⋈supplier⋈lineitem⋈orders⋈customer volume join.
-    def leafCols(df: DataFrame): Seq[String] =
-      df.queryExecution.optimizedPlan.collectLeaves()
-        .map(_.output.headOption.map(_.name).getOrElse("?"))
-    val qs: Seq[(String, () => DataFrame)] = Seq(
-      "q3" -> (() => graft.relational.RelationalQueries.q3Shipping(spark, Sf0001)),
-      "q7" -> (() => graft.relational.RelationalQueries.q7NationVolume(spark, Sf0001)))
-    val rawSide = qs.map { case (n, q) =>
-      (n, leafCols(q()), q().collect().map(_.toSeq.mkString("|")).sorted.toSeq)
-    }
-    val cboConfs = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
-    val saved = cboConfs.map(k => k -> spark.conf.getOption(k))
-    try {
-      Tables.materializeCatalog(spark, Sf0001, "graft_cbo_reg2")
-      cboConfs.foreach(spark.conf.set(_, "true"))
-      qs.zip(rawSide).foreach { case ((n, q), (_, rawOrder, rawRows)) =>
-        val cboOrder = leafCols(q())
-        assert(cboOrder != rawOrder,
-          s"registry $n did not reorder under managed-catalog CBO: $cboOrder")
-        val cboRows = q().collect().map(_.toSeq.mkString("|")).sorted.toSeq
-        assert(cboRows == rawRows, s"managed-catalog $n changed the result")
-      }
-    } finally {
-      spark.conf.unset(Tables.ManagedDbKey)
-      spark.conf.unset(Tables.ManagedDirKey)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-      spark.sql("DROP DATABASE IF EXISTS graft_cbo_reg2 CASCADE")
-    }
-  }
-
   test("CBO pulls the selective dimension out of a 5-way star's tail") {
     // A snowflake chain in the WORST syntactic order: the fact table
     // joins its biggest dimensions first and the 1/5-selective region

@@ -135,12 +135,11 @@ class MemoSuite extends SparkSpec {
   }
 
   test("Tables schema memo: repeat raw-path loads run zero Spark jobs") {
-    // the contract CboBench's probe classifier leans on: after the first
-    // footer inference per (session, path), constructing a table (and
-    // therefore any pure-planning query) launches no jobs at all
-    // the CboBench.syncedJobs barrier pattern: each flush submits a
-    // job-group-TAGGED sentinel and waits until the listener has SEEN that
-    // tag — the bus is FIFO, so every earlier JobStart is counted by then.
+    // after the first footer inference per (session, path), constructing a
+    // table (and therefore any pure-planning query) launches no jobs at all.
+    // Barrier: each flush submits a job-group-TAGGED sentinel and waits
+    // until the listener has SEEN that tag — the bus is FIFO, so every
+    // earlier JobStart is counted by then.
     // (An earlier quiescence-poll here could exit before the bus delivered
     // the sentinel under load — a deterministic barrier, not a timing bet.)
     class TaggedCounter extends org.apache.spark.scheduler.SparkListener {
