@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import graft.graph.Relax
 import graft.text.TextQueries
 
 /** Deduplication operators over the `documents` table — the first stage of
@@ -725,27 +726,17 @@ object DedupQueries {
     * pairwise dedup alone can't express (a~b, b~c ⇒ a,b,c in one cluster
     * even when a≁c directly).
     *
-    * Pregel-shaped min-label propagation: labels start as doc_id; each
-    * round every node takes the min of its own and its neighbors' labels;
-    * fixpoint in O(component diameter) rounds — near-dup clusters are tiny
-    * chains, so 2-3 rounds in practice. Each round is two keyed shuffles
-    * over the EDGE set (|pairs|·2 rows, minuscule next to the corpus).
-    *
-    * Every round checkpoints its result. This is load-bearing, not
-    * hygiene: each round's plan references the previous labels TWICE (the
-    * propagation join and the carry-through), so without lineage truncation
-    * the logical plan doubles per round — analysis plus the plan-string the
-    * driver materializes per action (`SQLExecution.withNewExecutionId`)
-    * go exponential in the round count (measured: 33 s → minutes at sf0.1
-    * for a 477-row result; the tasks themselves were never the cost).
-    * With the checkpoint each round's plan is O(1): a scan of the
-    * previous round's materialized RDD. The convergence check rides the
-    * same pass as a `chg` flag column — no second join per round.
-    * Truncation mode is a deployment knob ([[truncate]]): fast
-    * executor-local `localCheckpoint` by default, reliable `checkpoint()`
-    * to the cluster FS when the session opts in — same dataflow. The
-    * fixpoint is unique, so the result is deterministic regardless of
-    * scheduling, and a DuckDB recursive CTE reproduces it exactly. */
+    * Pregel-shaped min-label propagation ([[graft.graph.Relax.min]] with
+    * `hop = h`, until stable): labels start as doc_id; each round every
+    * node takes the min of its own and its neighbors' labels; fixpoint in
+    * O(component diameter) rounds — near-dup clusters are tiny chains, so
+    * 2-3 rounds in practice, each over the EDGE set (|pairs|·2 rows,
+    * minuscule next to the corpus) and truncated. Truncation mode is a
+    * deployment knob ([[truncate]]): fast executor-local `localCheckpoint`
+    * by default, reliable `checkpoint()` to the cluster FS when the session
+    * opts in — same dataflow. The fixpoint is unique, so the result is
+    * deterministic regardless of scheduling, and a DuckDB recursive CTE
+    * reproduces it exactly. */
   def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     componentLabelsMemo(spark, dir)
       .select(col("node").as("doc_id"), col("lab").as("canonical"))
@@ -786,34 +777,19 @@ object DedupQueries {
       }
     }
 
-  /** The converged min-label table (node, lab), truncated per round. */
+  /** The converged min-label table (node, lab): [[graft.graph.Relax.min]]
+    * until stable. Scoped: every round is truncated, so the adjacency cache
+    * is dead once the fixpoint is in hand and the artifact stays
+    * self-contained. */
   private def componentLabelsMemo(spark: SparkSession, dir: String): DataFrame =
     memoArtifact(spark, dir, "labels") {
-      val pairs = nearPairsMemo(spark, dir)
-      val edges = truncate(
-        pairs.union(pairs.select(col("doc_b"), col("doc_a"))).toDF("src", "dst"))
-      var labels = truncate(
-        edges.select(col("src").as("node")).distinct()
-          .select(col("node"), col("node").as("lab")))
-      var changed = 1L
-      while (changed > 0) {
-        val prop = edges
-          .join(labels, edges("dst") === labels("node"))
-          .groupBy(col("src")).agg(min(col("lab")).as("nl"))
-        val next = truncate( // eager: one job materializes the round
-          labels.as("l")
-            .join(prop, col("l.node") === prop("src"), "left")
-            .select(col("l.node").as("node"),
-              least(col("l.lab"), coalesce(col("nl"), col("l.lab"))).as("lab"),
-              (col("nl") < col("l.lab")).as("chg")))
-        changed = next.filter(coalesce(col("chg"), lit(false))).count() // scan of the checkpointed RDD, no join
-        labels = next.select(col("node"), col("lab"))
-        // superseded rounds: localCheckpoint blocks are reclaimed by the
-        // ContextCleaner once unreferenced; reliable-mode checkpoint FILES
-        // need spark.cleaner.referenceTracking.cleanCheckpoints=true as well
-        // (GraftSession sets it; truncate() warns when it's missing)
+      graft.Caches.scoped {
+        val pairs = nearPairsMemo(spark, dir)
+        val adj = Relax.adjacency(pairs.toDF("u", "v"),
+          graft.Memo.countOf(spark, s"neardup-pairs/$dir", pairs))
+        Relax.min(adj, Relax.ownLabels(adj), col("h"), Relax.UntilStable)
+          .select(col("v").as("node"), col("h").as("lab"))
       }
-      labels
     }
 
   /** Oracle: transitive closure as a recursive CTE (UNION dedup terminates
@@ -861,27 +837,25 @@ object DedupQueries {
   def docPagerank(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
     val pairs = nearPairsMemo(spark, dir)
-    // near-dup graph size gate (the er_golden_records note): a duplicate
-    // graph small enough to broadcast iterates on ONE partition — every
-    // round's join/agg runs exchange-free — while a corpus whose pair set
-    // outgrows the limit keeps the full-width rounds.
+    // edges and rank table at the data-proportional width of the edge
+    // count (Plans.sizeWidth), keyed on the join key: the round's
+    // edge⋈rank join is co-partitioned, and at width 1 (every test scale)
+    // SinglePartition makes every round's join and partial agg
+    // exchange-free
     val nPairs = graft.Memo.countOf(spark, s"neardup-pairs/$dir", pairs)
-    val collapse = 2 * nPairs <= graft.Plans.broadcastRowLimit(pairs)
+    val width = graft.Plans.sizeWidth(spark, 2 * nPairs)
     // strict doc_a < doc_b in the pair set → the two directions are disjoint
-    val edgesRaw = pairs.union(pairs.select(col("doc_b"), col("doc_a"))).toDF("src", "dst")
-    val edges = truncate(if (collapse) edgesRaw.repartition(1) else edgesRaw)
+    val edges = truncate(pairs.union(pairs.select(col("doc_b"), col("doc_a")))
+      .toDF("src", "dst").repartition(width, col("src")))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // |documents| via the memoized footer count (the n-parts/n-customers
     // pattern): the count is a model CONSTANT of the fixed-point formula,
     // and an un-memoized count() re-ran a scan job on every invocation
     val n = graft.Memo.countOf(spark, s"n-documents/$dir", docs)
-    // the rank table collapses with the edges: a 1-partition iterate makes
-    // every round's join + partial agg exchange-free (SinglePartition
-    // satisfies all their clusterings)
     val rank0 = docs.join(deg, docs("doc_id") === deg("src"), "left")
       .select(col("doc_id"), coalesce(col("deg"), lit(0L)).as("deg"),
         lit(PrScale / n).as("rank"))
-    var rank = truncate(if (collapse) rank0.repartition(1) else rank0)
+    var rank = truncate(rank0.repartition(width, col("doc_id")))
     for (_ <- 1 to PrIters) {
       // dangling mass as a broadcast one-row aggregate folded into the plan
       // (the q15_top_supplier scalar pattern) — NOT a driver-side .head:
@@ -1227,45 +1201,19 @@ object DedupQueries {
     *
     * Determinism: fixed synchronous rounds (engine-identical labels even
     * before convergence — the oracle unrolls the same rounds), integer
-    * survivorship tiebreaks, exact cents. Scale: the label rounds run on
-    * the MATCH edge set (output-sized, ≪ catalog); each round persists
-    * since the label set feeds both the self-union and the neighbor join
-    * (the BFS lineage lesson); the final field join is keyed on part id. */
+    * survivorship tiebreaks, exact cents. Scale: the label rounds
+    * ([[graft.graph.Relax.min]], each truncated) run on the MATCH edge set
+    * (output-sized, ≪ catalog); the final field join is keyed on part id. */
   def erGoldenRecords(spark: SparkSession, dir: String): DataFrame = {
     val pairs = graft.Caches.persisted(
-      erCandidates(spark, dir).select(col("part_a"), col("part_b")))
-    // match-graph size gate (exact count of the persisted pairs, memoized):
-    // under the broadcast row limit the whole label iteration collapses to
-    // ONE partition — the sourceClusters lesson: iterating a match graph
-    // this small across 32-way stages costs pure task scheduling (each
-    // round's join/agg then runs exchange-free, SinglePartition satisfies
-    // every clustering) — while a catalog whose match set outgrows the
-    // limit keeps the full 32-way rounds unchanged.
-    val nPairs = graft.Memo.countOf(spark, s"er-pairs/$dir", pairs)
-    val collapse = 2 * nPairs <= graft.Plans.broadcastRowLimit(pairs)
-    val adjRaw = pairs.select(col("part_a").as("v"), col("part_b").as("n"))
-      .unionByName(pairs.select(col("part_b").as("v"), col("part_a").as("n")))
-    val adj = graft.Caches.persisted(
-      if (collapse) adjRaw.repartition(1) else adjRaw)
-    // truncate (not persist) each round: lbl feeds BOTH the self-union and
-    // the neighbor join, so a lazy persist leaves a logical plan that
-    // doubles per round — 2⁴ subtrees by round 4, and the optimizer pays
-    // for every copy (measured 6.9 s → 3.6 s median at sf0.1). Checkpoint
-    // truncation keeps every round's plan O(1), the doc_pagerank policy.
-    var lbl = truncate(
-      adj.select(col("v")).distinct().withColumn("label", col("v")))
-    for (_ <- 1 to ErLabelRounds) {
-      lbl = truncate(lbl
-        .unionByName(
-          adj.join(lbl.select(col("v").as("n"), col("label")), "n")
-            .select(col("v"), col("label")))
-        .groupBy(col("v")).agg(min(col("label")).as("label")))
-    }
+      erCandidates(spark, dir).select(col("part_a").as("u"), col("part_b").as("v")))
+    val adj = Relax.adjacency(pairs, graft.Memo.countOf(spark, s"er-pairs/$dir", pairs))
+    val lbl = Relax.min(adj, Relax.ownLabels(adj), col("h"), Relax.Fixed(ErLabelRounds))
     val parts = Tables.part(spark, dir)
       .select(col("p_partkey"), col("p_name"), col("p_size"),
         round(col("p_retailprice") * 100).cast("bigint").as("price_cents"))
     lbl.join(parts, col("v") === col("p_partkey"))
-      .groupBy(col("label").as("cluster_id"))
+      .groupBy(col("h").as("cluster_id"))
       .agg(count(lit(1)).as("n_members"),
         min(struct(col("p_partkey"), col("p_name"))).as("m"),
         max(col("p_size")).cast("bigint").as("max_size"),

@@ -12,9 +12,9 @@ import graft.Tables
   * passing per job (`/root/reference/src/mr/worker.go:39` — the same shape
   * the original MapReduce paper demonstrates with PageRank); these operators
   * are the multi-round / join-heavy graph shapes that a declarative engine
-  * plans far better than hand-chained MR rounds. The iterative primitive
-  * (label propagation, PageRank) lives in [[graft.dedup.DedupQueries]]; this
-  * module holds the one-shot combinatorial shapes.
+  * plans far better than hand-chained MR rounds. The min-relaxation loop
+  * (BFS, shortest paths, min-label components) is [[Relax]]; PageRank lives
+  * in [[graft.dedup.DedupQueries]]; this module holds the rest.
   */
 object GraphQueries {
 
@@ -35,6 +35,24 @@ object GraphQueries {
     * so the size-gated joins cost no extra jobs. */
   private def copurchaseEdgesCounted(spark: SparkSession, dir: String): (DataFrame, Long) =
     graft.Memo.countedArtifact(spark, s"copurchase-edges/$dir")(copurchaseEdges(spark, dir))
+
+  /** The co-purchase [[Relax.adjacency]] `(v, n)`: persisted at
+    * data-proportional width keyed on `v`, so a degree or per-round
+    * aggregate runs exchange-free over the cache and every scan of it is
+    * |E|-proportional, not cores-many. Its row count (2|E|) bounds every
+    * vertex-keyed table of the family for the broadcast gates. */
+  private def copurchaseAdjacency(spark: SparkSession, dir: String): Relax.Adjacency = {
+    val (e, nEdges) = copurchaseEdgesCounted(spark, dir)
+    Relax.adjacency(e, nEdges)
+  }
+
+  /** The co-purchase hub — highest degree, ties to the smallest id — as the
+    * `(v, h = 0)` seed of a [[Relax.min]] search: a |V|-sized degree agg
+    * plus a TakeOrdered(1). */
+  private def hub(adj: Relax.Adjacency): DataFrame =
+    adj.df.groupBy(col("v")).agg(count(lit(1)).as("d"))
+      .orderBy(col("d").desc, col("v").asc).limit(1)
+      .select(col("v"), lit(0L).as("h"))
 
   /** The two basket base tables the whole family derives from, persisted
     * and memoized like [[copurchaseEdgesCounted]], one level lower:
@@ -532,23 +550,16 @@ object GraphQueries {
     * `max(struct(cnt, -label))`: no per-node sort, just a partial-agg
     * max. */
   def copurchaseCommunities(spark: SparkSession, dir: String): DataFrame = {
-    val (e, nEdges) = copurchaseEdgesCounted(spark, dir)
-    // adjacency cached at DATA-proportional width, keyed on the node id
-    // (Plans.sizeWidth): every round scans |E|-proportional tasks instead
-    // of cores-many, and HashPartitioning(v) satisfies the round's
-    // (v, label) and (v) aggregate clusterings — the per-round aggs run
-    // exchange-free over the cache
-    val adj = graft.Caches.persisted(
-      e.select(col("u").as("v"), col("v").as("n"))
-        .unionByName(e.select(col("v").as("v"), col("u").as("n")))
-        .repartition(graft.Plans.sizeWidth(spark, 2 * nEdges), col("v")))
+    // HashPartitioning(v) of the adjacency satisfies the round's (v, label)
+    // and (v) aggregate clusterings — the per-round aggs run exchange-free
+    val adj = copurchaseAdjacency(spark, dir)
     // Fixed LpaRounds = 3 ⇒ the lineage is 3 joins deep and each round's
     // output feeds exactly ONE consumer, so the whole chain evaluates
     // lazily in a single job over the cached adjacency — measured ~2×
     // faster than materializing every round with localCheckpoint (4 job
     // barriers). An unbounded-round variant would re-introduce per-round
-    // truncation exactly as dedup_components does.
-    var labels = adj.select(col("v")).distinct()
+    // truncation exactly as Relax.min does.
+    var labels = adj.df.select(col("v")).distinct()
       .withColumn("label", col("v"))
     for (_ <- 1 to LpaRounds) {
       // label table is |V|-sized (≤ 2|E| by the memo count) but aggregate-
@@ -557,9 +568,9 @@ object GraphQueries {
       // gate the labels broadcast (adj never moves; the only exchange per
       // round is the |V|-sized partial-agg output) and degrade to
       // shuffled-hash on a graph whose vertex set outgrows the threshold.
-      labels = adj
+      labels = adj.df
         .join(graft.Plans.broadcastIfSmall(
-          labels.select(col("v").as("n"), col("label")), 2 * nEdges), "n")
+          labels.select(col("v").as("n"), col("label")), adj.rows), "n")
         .groupBy(col("v"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("v"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
@@ -582,44 +593,13 @@ object GraphQueries {
     * deterministic (integer min over a set), so the unrolled-CTE oracle
     * matches exactly.
     *
-    * Scale: per round one adjacency⋈distances join keyed on the neighbor
-    * id plus one (node)-keyed min partial agg — edge-set-sized, the exact
-    * LPA/components loop shape, lazily chained over the cached adjacency
-    * (the distance set is at most |V|; nothing is driver-side). The hub
-    * selection is a |V|-sized agg + TakeOrdered(1). */
+    * Scale: the [[Relax.min]] round — the distance table (at most |V|
+    * rows) broadcast into the cached adjacency, one exchange-free min
+    * aggregate, truncated; nothing is driver-side. */
   def bfsHops(spark: SparkSession, dir: String): DataFrame = {
-    val (e, nEdges) = copurchaseEdgesCounted(spark, dir)
-    // data-proportional cache width, keyed v (the copurchaseCommunities
-    // note): round scans are |E|-proportional, not cores-many
-    val adj = graft.Caches.persisted(
-      e.select(col("u").as("v"), col("v").as("n"))
-        .unionByName(e.select(col("v").as("v"), col("u").as("n")))
-        .repartition(graft.Plans.sizeWidth(spark, 2 * nEdges), col("v")))
-    val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val src = deg.orderBy(col("d").desc, col("v").asc).limit(1).select(col("v"))
-    // unlike the LPA loop (labels consumed ONCE per round), each relaxation
-    // consumes dist TWICE (self-union + neighbor join) — left lazy, the
-    // lineage re-evaluates level r−1 twice, i.e. the hub selection 2³ times
-    // (measured 7.5 s vs 2.6 s at sf0.1). TRUNCATE each level (not a lazy
-    // persist): with persist the logical plan still doubles per round and
-    // the optimizer pays for 2³ subtrees — checkpoint truncation keeps
-    // every round's plan O(1) (the er_golden_records/doc_pagerank lesson,
-    // measured ~5.1 s → ~3.6 s steady-state at sf0.1)
-    var dist = graft.dedup.DedupQueries.truncate(src.withColumn("h", lit(0L)))
-    for (_ <- 1 to BfsRounds) {
-      // the distance table is |V|-sized but checkpoint-truncated (no
-      // stats): ungated, the relaxation join sort-merges and re-shuffles
-      // the cached EDGE set every round. Gate-broadcast the distances
-      // (≤ 2|E| rows by the memo count) so adj never moves; past the
-      // threshold the same join degrades to shuffled-hash.
-      dist = graft.dedup.DedupQueries.truncate(dist
-        .unionByName(
-          adj.join(graft.Plans.broadcastIfSmall(
-              dist.select(col("v").as("n"), col("h")), 2 * nEdges), "n")
-            .select(col("v"), (col("h") + 1).as("h")))
-        .groupBy(col("v")).agg(min(col("h")).as("h")))
-    }
-    dist.select(col("v").as("part_id"), col("h").cast("bigint").as("hops"))
+    val adj = copurchaseAdjacency(spark, dir)
+    Relax.min(adj, hub(adj), col("h") + 1, Relax.Fixed(BfsRounds))
+      .select(col("v").as("part_id"), col("h").cast("bigint").as("hops"))
   }
 
   /** Oracle: the same [[BfsRounds]] synchronous relaxations unrolled. */
@@ -667,15 +647,7 @@ object GraphQueries {
     * of this exact plan. */
   def raLinkPrediction(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (e, nEdges) = copurchaseEdgesCounted(spark, dir)
-    // data-proportional cache width keyed v (the copurchaseCommunities
-    // note): the degree agg runs exchange-free over the cache and each of
-    // the three adjacency passes (degree, seed frontier, wedge extension)
-    // scans |E|-proportional tasks instead of cores-many
-    val adj = graft.Caches.persisted(
-      e.select(col("u").as("v"), col("v").as("n"))
-        .unionByName(e.select(col("v").as("v"), col("u").as("n")))
-        .repartition(graft.Plans.sizeWidth(spark, 2 * nEdges), col("v")))
+    val Relax.Adjacency(adj, nAdj) = copurchaseAdjacency(spark, dir)
     val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
     // the seed set is the 10 smallest vertex ids — deg already holds every
     // distinct v, so rank it instead of re-scanning adj through a distinct
@@ -695,7 +667,7 @@ object GraphQueries {
       Seq("a", "b"), "left_anti")
     cand
       .join(graft.Plans.broadcastIfSmall(
-        deg.select(col("v").as("w"), col("d").as("dw")), 2 * nEdges), "w")
+        deg.select(col("v").as("w"), col("d").as("dw")), nAdj), "w")
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("common_neighbors"),
         sum(expr("1000000L div dw")).as("ra_ppm"))
@@ -770,43 +742,23 @@ object GraphQueries {
     * fixed round budget the relaxation is exact for paths of ≤ 3 edges
     * (Bellman–Ford's standard partial-result semantics).
     *
-    * Scale: identical loop shape to [[bfsHops]] — per round one
-    * adjacency⋈distances join keyed on the neighbor id + one node-keyed
-    * min partial agg, edge-set-sized, each level checkpoint-truncated
-    * because it is consumed twice (self-union + neighbor join). The
-    * weighted adjacency adds one (u,v)-keyed count agg over the same
-    * grouped pair expansion [[copurchaseEdges]] uses. */
+    * Scale: the [[bfsHops]] loop ([[Relax.min]]) over a weighted
+    * adjacency, which adds one (u,v)-keyed count agg over the same grouped
+    * pair expansion [[copurchaseEdges]] uses; the distinct pairs are
+    * exactly the co-purchase edges, so their memoized count sizes it. */
   def ssspWeighted(spark: SparkSession, dir: String): DataFrame = {
     val nEdges = copurchaseEdgesCounted(spark, dir)._2
-    // persisted: the symmetrizing union below consumes `pairs` twice —
-    // left lazy, the pair-expansion aggregate evaluates once per side
-    // while the adjacency cache materializes
+    // persisted: the symmetrizing union consumes `pairs` twice — left
+    // lazy, the pair-expansion aggregate evaluates once per side while the
+    // adjacency cache materializes
     val pairs = graft.Caches.persisted(orderBaskets(spark, dir)
       .select(explode(expr(PairExpandSql)).as("p"))
       .groupBy(col("p")).agg(count(lit(1)).as("cnt"))
       .select(unpackU(col("p")).as("u"), unpackV(col("p")).as("v"),
         expr("1000000L div cnt").as("w")))
-    val adj = graft.Caches.persisted(
-      pairs.select(col("u").as("v"), col("v").as("n"), col("w"))
-        .unionByName(pairs.select(col("v").as("v"), col("u").as("n"), col("w")))
-        // data-proportional cache width, keyed v (the copurchaseCommunities
-        // note): round scans are |E|-proportional, not cores-many
-        .repartition(graft.Plans.sizeWidth(spark, 2 * nEdges), col("v")))
-    val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val src = deg.orderBy(col("d").desc, col("v").asc).limit(1).select(col("v"))
-    var dist = graft.dedup.DedupQueries.truncate(src.withColumn("h", lit(0L)))
-    for (_ <- 1 to SsspRounds) {
-      // gate-broadcast the |V|-sized distance table (the bfsHops note):
-      // ungated, the stats-less checkpointed side forces a sort-merge
-      // that re-shuffles the cached weighted adjacency every round
-      dist = graft.dedup.DedupQueries.truncate(dist
-        .unionByName(
-          adj.join(graft.Plans.broadcastIfSmall(
-              dist.select(col("v").as("n"), col("h")), 2 * nEdges), "n")
-            .select(col("v"), (col("h") + col("w")).as("h")))
-        .groupBy(col("v")).agg(min(col("h")).as("h")))
-    }
-    dist.select(col("v").as("part_id"), col("h").cast("bigint").as("dist_micro"))
+    val adj = Relax.adjacency(pairs, nEdges)
+    Relax.min(adj, hub(adj), col("h") + col("w"), Relax.Fixed(SsspRounds))
+      .select(col("v").as("part_id"), col("h").cast("bigint").as("dist_micro"))
   }
 
   /** Oracle: the same [[SsspRounds]] synchronous min-plus relaxations
@@ -1043,12 +995,8 @@ object GraphQueries {
     * each round's edges feed both the degree count and the next filter.
     * No driver round-trips. */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
-    val (und, nEdges) = copurchaseEdgesCounted(spark, dir)
-    // peel table at DATA-proportional width keyed on v (Plans.sizeWidth):
-    // HashPartitioning(v) satisfies every round's degree-agg clustering
-    // (exchange-free over the checkpoint — checkpoint preserves
-    // partitioning) and each round's two full-table scans run
-    // |E|-proportional tasks instead of cores-many per stage
+    // the adjacency's HashPartitioning(v) satisfies every round's
+    // degree-agg clustering (exchange-free over the cache).
     // K_r nesting (K_{r+1} ⊆ K_r: a round-r survivor needs ≥ k edges among
     // round-(r-1) survivors) means edges_r = edges_0 restricted to
     // K_r-endpoints — so the peel keeps the EDGE table LAZY over the
@@ -1059,10 +1007,7 @@ object GraphQueries {
     // store per peel at sf0.1; the per-round broadcast that lost THERE
     // lost against AQE's local-read conversion — here there is no edge
     // exchange left to convert).
-    val e0 = graft.Caches.persisted(
-      und.select(col("u").as("v"), col("v").as("n"))
-        .unionByName(und.select(col("v").as("v"), col("u").as("n")))
-        .repartition(graft.Plans.sizeWidth(spark, 2 * nEdges), col("v")))
+    val Relax.Adjacency(e0, nAdj) = copurchaseAdjacency(spark, dir)
     var edges = e0
     for (_ <- 1 to KcorePeels) {
       // truncate: the survivor set is |V|-sized and feeds both prunes —
@@ -1072,7 +1017,7 @@ object GraphQueries {
           .filter(col("d") >= KcoreK).select(col("v")))
       // gate-broadcast: ≤ |V| ≤ 2|E| rows by the memo count; past the
       // limit the probes degrade to shuffled-hash, same semantics
-      val keepB = graft.Plans.broadcastIfSmall(keep, 2 * nEdges)
+      val keepB = graft.Plans.broadcastIfSmall(keep, nAdj)
       edges = edges.join(keepB, Seq("v"), "left_semi")
         .join(keepB.select(col("v").as("n")), Seq("n"), "left_semi")
     }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,11 +35,14 @@ object BucketedTables {
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
 
   /** Write lineitem + orders bucketed by order key (idempotent per session
-    * + dataset); returns the two table names. */
+    * + dataset); returns the two table names. The files live under the
+    * application's own scratch root (`SparkFiles.getRootDirectory`, removed
+    * when the context stops), so two JVMs sharing a tmpdir never write
+    * over each other's copies. */
   def ensure(spark: SparkSession, dir: String): (String, String) = {
     val sfx = suffix(dir)
     val (lt, ot) = (s"lineitem_bkt_$sfx", s"orders_bkt_$sfx")
-    val base = s"${sys.props("java.io.tmpdir")}/graft-bucketed/$sfx"
+    val base = s"${SparkFiles.getRootDirectory()}/graft-bucketed/$sfx"
     if (!spark.catalog.tableExists(lt))
       Tables.lineitem(spark, dir).write.mode(SaveMode.Overwrite)
         .bucketBy(NumBuckets, "l_orderkey").sortBy("l_orderkey")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
+import graft.graph.Relax
 
 /** Corpus-level statistics for curation decisions — the "what is in this
   * corpus, and how do its sources relate" family that sits alongside the
@@ -305,42 +306,20 @@ object CorpusStats {
     *
     * Scale shape: the expensive part IS [[corpusOverlap]] (gram-keyed, one
     * corpus pass); everything after runs on the |sources|-row node table
-    * and the thresholded edge list — min-label propagation rounds are
-    * edge-set-sized and `localCheckpoint`-truncated exactly like the
-    * document-level components loop, terminating in O(cluster diameter). */
+    * and the thresholded edge list — the document-level components loop
+    * ([[graft.graph.Relax.min]] until stable, seeded with every source so
+    * singletons keep their own label), terminating in O(cluster
+    * diameter) rounds. */
   def sourceClusters(spark: SparkSession, dir: String): DataFrame = {
-    // node/edge tables are |sources|-sized (~60 rows) — collapse to ONE
-    // partition before the label rounds: iterating tables this small
-    // across 32-way shuffles costs pure task-scheduling (the
-    // embed_top_direction lesson; measured ~1.7 s of the query's wall
-    // beyond the corpus_overlap pass it consumes)
-    val pairs = corpusOverlap(spark, dir)
+    // persisted: its exact count sizes the adjacency, which then reads it
+    val pairs = graft.Caches.persisted(corpusOverlap(spark, dir)
       .filter(col("jaccard_ppm") >= ClusterPpm)
-      .select(col("source_a"), col("source_b"))
-      .repartition(1)
-      .localCheckpoint()
+      .select(col("source_a").as("u"), col("source_b").as("v")))
+    val adj = Relax.adjacency(pairs, graft.Memo.countOf(spark, s"source-pairs/$dir", pairs))
     val nodes = Tables.documents(spark, dir).select(col("source")).distinct()
-    val edges = pairs.union(pairs.select(col("source_b"), col("source_a")))
-      .toDF("src", "dst")
-    var labels = nodes.select(col("source").as("node"), col("source").as("lab"))
-      .repartition(1)
-      .localCheckpoint()
-    var changed = 1L
-    while (changed > 0) {
-      val prop = edges
-        .join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src")).agg(min(col("lab")).as("nl"))
-      val next = labels.as("l")
-        .join(prop.hint("shuffle_hash"), col("l.node") === prop("src"), "left")
-        .select(col("l.node").as("node"),
-          least(col("l.lab"), coalesce(col("nl"), col("l.lab"))).as("lab"),
-          (col("nl") < col("l.lab")).as("chg"))
-        .localCheckpoint()
-      changed = next.filter(coalesce(col("chg"), lit(false))).count()
-      labels = next.select(col("node"), col("lab"))
-    }
-    labels
-      .select(col("node").as("source"), col("lab").as("cluster"))
+    Relax.min(adj, nodes.select(col("source").as("v"), col("source").as("h")),
+      col("h"), Relax.UntilStable)
+      .select(col("v").as("source"), col("h").as("cluster"))
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster"))))
   }

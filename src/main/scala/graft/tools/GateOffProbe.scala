@@ -35,6 +35,9 @@ object GateOffProbe {
     // graph family: degree/adjacency attaches gated on the exact |E| memo count
     "copurchase_triangles", "copurchase_clustering", "copurchase_assortativity",
     "frequent_pairs", "copurchase_ra_links",
+    // min-relaxation loops: the iterate's broadcast gate in Relax.min
+    "graph_bfs_hops", "graph_sssp", "er_golden_records", "source_clusters",
+    "dedup_components",
     // relational: stats-gated dimension chains + q2's aggregate-derived attach
     "q2_min_cost_supplier", "q3_shipping", "q5_nation_revenue",
     "q9_product_profit", "q16_supplier_counts",

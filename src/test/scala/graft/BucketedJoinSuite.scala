@@ -52,6 +52,20 @@ class BucketedJoinSuite extends SparkSpec {
     assert(bucketed.nonEmpty)
   }
 
+  test("bucketed copies live in the application's own scratch root") {
+    // a path shared between applications (the JVM tmpdir) lets two JVMs
+    // on one host overwrite each other's copies mid-write
+    val root = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory()).getCanonicalPath
+    val (lt, ot) = BucketedTables.ensure(spark, Sf0001)
+    for (t <- Seq(lt, ot)) {
+      val loc = spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location
+      val path = new java.io.File(loc).getCanonicalPath
+      assert(path.startsWith(root + java.io.File.separator),
+        s"$t is stored at $path, outside the application root $root")
+    }
+  }
+
   test("registered query: only the final tiny agg exchanges, never the join") {
     val q = BucketedTables.orderPriorityRevenue(spark, Sf0001)
     // simple tree mode: each Exchange node prints exactly once

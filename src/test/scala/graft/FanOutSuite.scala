@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
-/** Round-15 optimization contracts: the unsplittable-input fan-out
-  * ([[Plans.fanOut]]) and the small-graph single-partition iteration gates
-  * must change PLANS only, never rows.
+/** Optimization contracts: the unsplittable-input fan-out
+  * ([[Plans.fanOut]]) and the iterate sizing of the graph loops must
+  * change PLANS only, never rows.
   *
   *  - fan-out fires exactly when the source yields fewer splits than
   *    cores, repartitions by the given key, and is disabled by
@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions._
   *    identical result multiset for a representative heavy query;
   *  - a frame that already has ≥ cores partitions passes through untouched
   *    (the deployment-scale no-op the design note promises);
-  *  - er_golden_records / doc_pagerank return identical rows with the
-  *    collapse gate forced OFF (broadcastRowLimit = 0 ⇒ full-width rounds),
-  *    pinning that the 1-partition iterate is a pure plan choice. */
+  *  - the min-relaxation loops and doc_pagerank return identical rows at
+  *    several partitions (`spark.graft.rowsPerPartition`) and with the
+  *    iterate's broadcast gate forced to shuffled-hash
+  *    (broadcastRowLimit = 0), pinning that iterate width and join
+  *    strategy are pure plan choices. */
 class FanOutSuite extends SparkSpec {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -59,16 +61,26 @@ class FanOutSuite extends SparkSpec {
     } finally { spark.conf.unset(Plans.FanOutKey); Caches.drain() }
   }
 
-  test("small-graph collapse gates change plans only: identical rows at full width") {
-    val er = rows(graft.dedup.DedupQueries.erGoldenRecords(spark, Sf0001))
-    val pr = rows(graft.dedup.DedupQueries.docPagerank(spark, Sf0001))
-    Caches.drain()
-    spark.conf.set(Plans.BroadcastRowLimitKey, "0") // forces collapse = false
-    try {
-      assert(rows(graft.dedup.DedupQueries.erGoldenRecords(spark, Sf0001)) == er,
-        "er_golden_records: full-width label rounds diverge from the collapsed iterate")
-      assert(rows(graft.dedup.DedupQueries.docPagerank(spark, Sf0001)) == pr,
-        "doc_pagerank: full-width rounds diverge from the collapsed iterate")
-    } finally { spark.conf.unset(Plans.BroadcastRowLimitKey); Caches.drain() }
+  test("iterate width and broadcast gate change plans only: identical rows") {
+    // rowsPerPartition per graph size, so that at sf0.001 every loop runs
+    // at several partitions and none at thousands: the co-purchase
+    // adjacency has ~17.8k rows (width 4 at 5000), the match, near-dup and
+    // source adjacencies 20–56 (widths 3–7 at 8)
+    val loops = Seq("graph_bfs_hops" -> 5000, "graph_sssp" -> 5000,
+      "er_golden_records" -> 8, "source_clusters" -> 8, "dedup_components" -> 8,
+      "doc_pagerank" -> 8)
+    def run(name: String, conf: (String, String)*): Seq[String] = {
+      Memo.evictSession(spark) // dedup_components' labels are memoized
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try rows(SparkEntry.query(name).run(spark, Sf0001))
+      finally { conf.foreach { case (k, _) => spark.conf.unset(k) }; Caches.drain() }
+    }
+    for ((name, perPartition) <- loops) {
+      val base = run(name)
+      assert(run(name, Plans.RowsPerPartitionKey -> perPartition.toString) == base,
+        s"$name: rows differ at several partitions")
+      assert(run(name, Plans.BroadcastRowLimitKey -> "0") == base,
+        s"$name: rows differ with the iterate joined shuffled-hash")
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupQueries
@@ -127,16 +128,22 @@ class RelationalExtrasSuite extends SparkSpec {
     }
   }
 
+  /** The until-stable label loops whose rounds truncate through
+    * `DedupQueries.truncate`, so they follow its reliable-checkpoint mode. */
+  private val truncatingLoops = Map[String, (SparkSession, String) => DataFrame](
+    "dedup_components" -> DedupQueries.dedupComponents,
+    "source_clusters" -> graft.text.CorpusStats.sourceClusters)
+
   test("dedup_components: reliable mode without a checkpoint dir fails fast") {
     // Must run before the reliable-mode test below: setCheckpointDir is
     // one-way on the shared session. Skip (vacuous) if one is already set.
     assume(spark.sparkContext.getCheckpointDir.isEmpty)
     spark.conf.set(DedupQueries.ReliableCheckpointConf, "true")
     try {
-      val e = intercept[IllegalArgumentException] {
-        DedupQueries.dedupComponents(spark, Sf0001).collect()
+      for ((name, q) <- truncatingLoops) {
+        val e = intercept[IllegalArgumentException](q(spark, Sf0001).collect())
+        assert(e.getMessage.contains("setCheckpointDir"), s"$name: ${e.getMessage}")
       }
-      assert(e.getMessage.contains("setCheckpointDir"))
     } finally spark.conf.unset(DedupQueries.ReliableCheckpointConf)
   }
 
@@ -144,15 +151,15 @@ class RelationalExtrasSuite extends SparkSpec {
     // The deployment knob for executor-loss tolerance: rounds truncate via
     // reliable checkpoint() to a cluster-FS dir instead of localCheckpoint.
     // Same dataflow, same unique fixpoint — assert equal results.
-    val base = DedupQueries.dedupComponents(spark, Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def rows(q: (SparkSession, String) => DataFrame): Set[String] =
+      q(spark, Sf0001).collect().map(_.toSeq.mkString("|")).toSet
+    val base = truncatingLoops.map { case (name, q) => name -> rows(q) }
     val ckptDir = Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(ckptDir)
     spark.conf.set(DedupQueries.ReliableCheckpointConf, "true")
     try {
-      val reliable = DedupQueries.dedupComponents(spark, Sf0001).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(reliable == base)
+      for ((name, q) <- truncatingLoops)
+        assert(rows(q) == base(name), s"$name: reliable-mode rows differ")
       // the rounds actually wrote through the reliable dir
       assert(Files.list(Paths.get(ckptDir)).iterator().hasNext)
     } finally spark.conf.unset(DedupQueries.ReliableCheckpointConf)
