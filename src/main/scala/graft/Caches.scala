@@ -32,16 +32,13 @@ object Caches {
 
   /** Persist `df` and register it for release at the next [[drain]] (or at
     * the end of the enclosing [[scoped]] block, when there is one). */
-  def persisted(df: DataFrame): DataFrame = register(df.persist())
-
-  /** Register an already-persisted handle for release at the next [[drain]]
-    * (or enclosing scope exit). */
-  def register(df: DataFrame): DataFrame = {
+  def persisted(df: DataFrame): DataFrame = {
+    val cached = df.persist()
     scope.get() match {
-      case q :: _ => q.add(df)
-      case Nil => registered.add(df)
+      case q :: _ => q.add(cached)
+      case Nil => registered.add(cached)
     }
-    df
+    cached
   }
 
   /** Run `body`, then unpersist every cache it registered. Only safe when

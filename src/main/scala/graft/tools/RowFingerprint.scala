@@ -3,12 +3,12 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Order-free, duplicate-sensitive row fingerprint shared by the probe
-  * and soak tools (GateOffProbe, Soak): (row count, Σ crc32(canonical row
-  * string)), computed with no driver-side row materialization — the
-  * library's no-collect rule applies to tools too. Both compared runs
-  * execute the same final projection, so identical values imply identical
-  * formatting.
+/** Order-free, duplicate-sensitive row fingerprint shared by
+  * [[Invariance]] and the benchmark's output checks (perfbench's
+  * `Workloads`): (row count, Σ crc32(canonical row string)), computed with
+  * no driver-side row materialization — the library's no-collect rule
+  * applies to tools too. Both compared runs execute the same final
+  * projection, so identical values imply identical formatting.
   *
   * The row encoding is PREFIX-FREE, with no sentinel assumptions:
   *  - NULL is disambiguated STRUCTURALLY: the canonical row string leads
@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
   *    shifts field boundaries, masking exactly the plan-change row drift
   *    the probes exist to catch. Decoding <len>:<value> left-to-right is
   *    unambiguous for every value alphabet (digits then ':' then exactly
-  *    len chars), so distinct rows encode to distinct strings.
-  * (An earlier copy coalesced NULL to a bare " " and joined on '|'; both
-  * holes are closed here in the one shared helper.) */
+  *    len chars), so distinct rows encode to distinct strings. */
 object RowFingerprint {
   def apply(df: DataFrame): (Long, Long) = {
     val cols = df.columns.sorted

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Caches, Conf, SparkEntry}
+import graft.{Caches, Conf, SparkEntry, Verify}
 import graft.plans.GraftSession
 
 /** Empirical scaling probe for the expensive operators: replicate the
@@ -19,8 +19,9 @@ import graft.plans.GraftSession
   * source column gets a replica suffix so per-source operators keep
   * per-shard cardinality roughly constant.
   *
-  * `runMain graft.tools.ScaleProbe [maxK] [sfDir] [outBase]` — times each
-  * probe query at k = 1, 2, 4, … ≤ maxK and prints one line per (k, query).
+  * `runMain graft.tools.ScaleProbe [maxK] [sfDir] [outBase] [q1,q2,...]` —
+  * times each probe query (or each named registered query) at
+  * k = 1, 2, 4, … ≤ maxK and prints one line per (k, query).
   */
 object ScaleProbe {
 
@@ -145,19 +146,16 @@ object ScaleProbe {
     val maxK = args.headOption.map(_.toInt).getOrElse(4)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val outBase = args.lift(2).getOrElse("/tmp/graft-scaleprobe")
-    // optional comma-separated probe filter, e.g. "doc_pagerank,word_pmi"
-    val probes = args.lift(3)
-      .map(_.split(',').toSeq.map(_.trim).filter(Probes.contains))
-      .filter(_.nonEmpty)
-      .getOrElse(Probes)
+    // optional comma-separated query names, e.g. "doc_pagerank,word_pmi",
+    // resolved before the session starts: a typo fails in milliseconds
+    val probes = args.lift(3).fold(Probes.map(SparkEntry.query))(n => Verify.selected(Some(n)))
     val spark = GraftSession.builder(Conf.cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val ks = Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxK).toSeq
     ks.foreach { k =>
       val dir = s"$outBase/k$k"
       replicate(spark, sfDir, k, dir)
-      probes.foreach { name =>
-        val fn = SparkEntry.query(name).run
+      probes.foreach { case SparkEntry.Query(name, fn, _) =>
         fn(spark, dir).count() // warm (codegen/JIT for this plan shape)
         Caches.drain()
         val t0 = System.nanoTime()

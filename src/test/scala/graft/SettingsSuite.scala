@@ -6,15 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Settings inventory: every `spark.graft.*` key and `SPARK_GRAFT_*`
-  * environment variable spelled as a string literal in the program has one
-  * row in README.md's "Settings" table, and every row names a setting the
-  * program still reads — so a new setting cannot land unlisted, and a
-  * removed one cannot linger in the docs. */
+/** Settings and entry-points inventories: every `spark.graft.*` key and
+  * `SPARK_GRAFT_*` environment variable spelled as a string literal in the
+  * program has one row in README.md's "Settings" table, and every row
+  * names a setting the program still reads — so a new setting cannot land
+  * unlisted, and a removed one cannot linger in the docs. Likewise every
+  * object with a `main` has one row in README's "Entry points" table. */
 class SettingsSuite extends AnyFunSuite {
 
   private val Literal = "\"(spark\\.graft\\.[A-Za-z0-9_.]+|SPARK_GRAFT_[A-Z0-9_]+)\"".r
   private val Row = "^\\| `(spark\\.graft\\.[A-Za-z0-9_.]+|SPARK_GRAFT_[A-Z0-9_]+)` \\|".r
+  private val MainRow = "^\\| `(graft\\.[A-Za-z0-9_.]+)[ `]".r
 
   test("README's Settings table lists exactly the settings src/main/scala reads") {
     val root = Paths.get("src/main/scala")
@@ -32,5 +34,28 @@ class SettingsSuite extends AnyFunSuite {
     assert(unlisted.isEmpty && stale.isEmpty,
       s"read but not in README's Settings table: ${unlisted.toSeq.sorted.mkString(", ")}; " +
         s"in the table but read nowhere: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("README's Entry points table lists exactly the objects in src/main/scala with a main") {
+    // the object a main belongs to is the last one declared before it
+    val mains: Set[String] = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).map(Files.readString).flatMap { src =>
+      val pkg = "(?m)^package ([A-Za-z0-9_.]+)".r.findFirstMatchIn(src).map(_.group(1))
+      val objects = "\\bobject ([A-Za-z0-9_]+)".r.findAllMatchIn(src).toSeq
+      "def main\\(args: Array\\[String\\]\\)".r.findAllMatchIn(src).map { m =>
+        val obj = objects.takeWhile(_.start < m.start).last.group(1)
+        pkg.fold(obj)(p => s"$p.$obj")
+      }
+    }.toSet
+    val section = Files.readAllLines(Paths.get("README.md")).asScala.toSeq
+      .dropWhile(_ != "## Entry points").drop(1).takeWhile(!_.startsWith("## "))
+    val rows = section.flatMap(l => MainRow.findFirstMatchIn(l).map(_.group(1)))
+    assert(rows.nonEmpty, "README has no \"## Entry points\" table")
+    assert(rows.distinct == rows, s"mains listed twice: ${rows.diff(rows.distinct)}")
+    val unlisted = mains -- rows
+    val stale = rows.toSet -- mains
+    assert(unlisted.isEmpty && stale.isEmpty,
+      s"mains not in README's Entry points table: ${unlisted.toSeq.sorted.mkString(", ")}; " +
+        s"in the table but no such main: ${stale.toSeq.sorted.mkString(", ")}")
   }
 }

@@ -30,15 +30,19 @@ class VerifySuite extends AnyFunSuite {
   test("an unknown query name fails before any Spark session starts") {
     assert(Verify.selected(Some("events_cms,q5_nation_revenue,events_cms")).map(_.name) ==
       Seq("events_cms", "q5_nation_revenue"))
-    val before = SparkSession.getDefaultSession
     val tmp = java.nio.file.Files.createTempDirectory("verify-suite")
     val out = tmp.resolve("out")
-    try {
-      val e = intercept[NoSuchElementException](
-        Verify.main(Array("never-read-sf-dir", out.toString, "q5_nation_revenue,no_such_query")))
-      assert(e.getMessage == "unknown query: no_such_query")
-      assert(SparkSession.getDefaultSession == before, "Verify started a Spark session")
-      assert(!java.nio.file.Files.exists(out), "Verify created its output dir")
+    val names = "q5_nation_revenue,no_such_query"
+    val mains: Seq[(String, Array[String] => Unit, Array[String])] = Seq(
+      ("Verify", Verify.main, Array("never-read-sf-dir", out.toString, names)),
+      ("ScaleProbe", graft.tools.ScaleProbe.main, Array("1", "never-read-sf-dir", out.toString, names)),
+      ("Invariance", graft.tools.Invariance.main, Array("never-read-sf-dir", "2", names)))
+    try mains.foreach { case (tool, main, args) =>
+      val before = SparkSession.getDefaultSession
+      val e = intercept[NoSuchElementException](main(args))
+      assert(e.getMessage == "unknown query: no_such_query", tool)
+      assert(SparkSession.getDefaultSession == before, s"$tool started a Spark session")
+      assert(!java.nio.file.Files.exists(out), s"$tool created its output dir")
     } finally Seq(out, tmp).foreach(java.nio.file.Files.deleteIfExists)
   }
 }
