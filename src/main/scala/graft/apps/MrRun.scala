@@ -30,7 +30,7 @@ object MrRun {
       if (app.startsWith("plugin:")) graft.core.MrPlugin.load(app.stripPrefix("plugin:")).job
       else apps.getOrElse(app,
         throw new IllegalArgumentException(s"unknown app '$app'; have ${apps.keys.mkString(",")} or plugin:<FQCN>"))
-    val job = if (args.length > 3) base.withNReduce(args(3).toInt) else base
+    val job = base.withNReduce(graft.Conf.positiveInt("nReduce", args.lift(3), base.nReduce))
     val spark = GraftSession.builder(graft.Conf.cpus.toString).appName(s"mr-$app").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     job.runToText(spark, glob, outDir)

@@ -1,6 +1,15 @@
 package graft
 
-import org.apache.spark.TaskContext
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{HashPartitioner, TaskContext}
+
+import graft.apps.ReferenceApps
+import graft.core.MapReduceJob
 
 /** SURVEY.md §5.2.4/§5.2.6 — the reference's scheduler-behavior assertions
   * (A5 jobcount, A6/A7 parallelism, crash recovery), re-expressed as Spark
@@ -57,4 +66,56 @@ class ExecutionSemanticsSuite extends SparkSpec {
     // jobcount assertion under crash.go
     assert(acc.value == 4L)
   }
+
+  test("MapReduceJob: the reducer sees every value of its key, also when a map or reduce task is retried") {
+    import ExecutionSemanticsSuite._
+    val dir = Paths.get(getClass.getResource("/parity-corpus").toURI)
+    val files = Files.list(dir).iterator.asScala.toSeq.map(p =>
+      (p.getFileName.toString, new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
+    // driver-side fold: TaskContext.get is null here, so nothing is injected
+    val oracle = valuesJob(None, None)
+    val expected = files.flatMap { case (f, c) => oracle.mapf(f, c) }
+      .groupBy(_._1).toSeq
+      .map { case (k, kvs) => s"$k ${oracle.reducef(k, kvs.map(_._2))}" }
+      .sorted
+    val reducePartition = new HashPartitioner(oracle.nReduce).getPartition("len3")
+    for ((leg, job) <- Seq(
+        "clean" -> valuesJob(None, None),
+        "map retried" -> valuesJob(Some(0), None),
+        "reduce retried" -> valuesJob(None, Some(reducePartition)))) {
+      injected.set(0)
+      val got = MapReduceJob.mergedLines(job.run(spark, s"$dir/*.txt"))
+      if (got != expected) fail(s"$leg: ${got.length} lines, ${expected.length} expected, " +
+        s"first difference at line ${got.zip(expected).indexWhere { case (g, e) => g != e }}")
+      assert(injected.get == (if (leg == "clean") 0 else 1), leg)
+    }
+  }
+}
+
+object ExecutionSemanticsSuite {
+  /** First attempts that threw; the executor shares the test JVM. */
+  val injected = new AtomicInteger
+
+  private def failFirstAttempt(partition: Int): Unit = {
+    val tc = TaskContext.get()
+    if (tc != null && tc.partitionId == partition && tc.attemptNumber == 0) {
+      injected.incrementAndGet()
+      throw new RuntimeException(s"injected failure in partition $partition (crash.go analog)")
+    }
+  }
+
+  /** A job whose seven keys repeat within and across files (a word's length
+    * mod 7) and whose reduce keeps every value, so a lost or doubled
+    * value changes the output. `failMap`/`failReduce` name the map or
+    * reduce partition whose first attempt throws. */
+  def valuesJob(failMap: Option[Int], failReduce: Option[Int]): MapReduceJob = new MapReduceJob(
+    mapf = (file, contents) => {
+      failMap.foreach(failFirstAttempt)
+      ReferenceApps.tokenize(contents).map(w => (s"len${w.length % 7}", s"$file:$w"))
+    },
+    reducef = (_, values) => {
+      failReduce.foreach(failFirstAttempt)
+      values.sorted.mkString(",")
+    },
+    nReduce = 3)
 }

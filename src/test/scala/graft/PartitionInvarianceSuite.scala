@@ -1,11 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.HashPartitioner
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.apps.ReferenceApps
+import graft.apps.{MrRun, ReferenceApps}
 import graft.core.MapReduceJob
 
 /** SURVEY.md §5.2.2 — the reference's P1/P2 properties: the merged sorted
@@ -59,6 +62,43 @@ class PartitionInvarianceSuite extends SparkSpec {
       val base = MapReduceJob.mergedLines(new MapReduceJob(m, r, 1).run(spark, glob))
       val multi = MapReduceJob.mergedLines(new MapReduceJob(m, r, n).run(spark, glob))
       assert(base == multi, s"seed=$seed nReduce=$n")
+    }
+  }
+
+  test("part file i holds exactly the keys HashPartitioner(nReduce) assigns to partition i") {
+    val glob = s"${Paths.get(getClass.getResource("/parity-corpus").toURI)}/*.txt"
+    val jobs = Seq(
+      "wc" -> ReferenceApps.wcJob,
+      "indexer" -> ReferenceApps.indexerJob,
+      "fileStats" -> ReferenceApps.fileStatsJob)
+    for ((name, job) <- jobs; n <- Seq(1, 3, 10)) {
+      val out = Files.createTempDirectory("graft-parts")
+      job.withNReduce(n).runToText(spark, glob, out.toString)
+      val partitioner = new HashPartitioner(n)
+      val parts = Files.list(out).iterator.asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("part-")).toSeq
+      assert(parts.nonEmpty, s"$name nReduce=$n")
+      val keys = parts.flatMap { f =>
+        val i = f.stripPrefix("part-").take(5).toInt
+        val fileKeys = Files.readAllLines(out.resolve(f)).asScala.toSeq.map(_.takeWhile(_ != ' '))
+        fileKeys.foreach(k =>
+          assert(partitioner.getPartition(k) == i, s"$name nReduce=$n: key '$k' in $f"))
+        fileKeys
+      }
+      assert(keys.distinct.length == keys.length, s"$name nReduce=$n: a key appears in two lines")
+    }
+  }
+
+  test("nReduce must be a positive integer: 0, -1 and 'abc' fail naming nReduce") {
+    for (bad <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](ReferenceApps.wcJob.withNReduce(bad))
+      assert(e.getMessage.contains(s"nReduce must be a positive integer, got $bad"), e.getMessage)
+    }
+    // MrRun rejects its argument before any Spark session starts
+    for (bad <- Seq("0", "-1", "abc")) {
+      val e = intercept[IllegalArgumentException](
+        MrRun.main(Array("wc", "no-input/*.txt", "no-output", bad)))
+      assert(e.getMessage.contains(s"nReduce must be a positive integer, got '$bad'"), e.getMessage)
     }
   }
 }
