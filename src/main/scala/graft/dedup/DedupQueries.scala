@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Plans.{truncate, truncatedArtifact}
 import graft.Tables
 import graft.graph.Relax
 import graft.text.TextQueries
@@ -685,41 +686,6 @@ object DedupQueries {
        |  CAST(sum(LEAST($SpanTokens, COALESCE(gap, $SpanTokens))) AS BIGINT) AS dup_tokens
        |FROM hits GROUP BY doc_id""".stripMargin
 
-  /** Session conf selecting [[dedupComponents]]' lineage-truncation mode. */
-  val ReliableCheckpointConf = "spark.graft.components.reliableCheckpoint"
-
-  private def reliableCheckpoint(spark: SparkSession): Boolean =
-    graft.Conf.boolean(spark, ReliableCheckpointConf, false)
-
-  /** Eager lineage truncation for the label-propagation loop.
-    *
-    * Default: `localCheckpoint` — blocks live on executors, fastest, but an
-    * executor loss mid-loop loses them and fails the job (acceptable when a
-    * restart is cheap). With `spark.graft.components.reliableCheckpoint=true`
-    * the rounds use reliable `checkpoint()` to the SparkContext checkpoint
-    * dir (cluster FS on a real deployment) instead, surviving executor loss
-    * at the price of a write+read per round — the edge set and label table
-    * are |pairs|-sized, minuscule next to the corpus, so the premium is
-    * small. Requires `SparkContext.setCheckpointDir`; fails fast with a
-    * clear message if the knob is on without a dir. */
-  private[graft] def truncate(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (!reliableCheckpoint(spark)) df.localCheckpoint()
-    else {
-      val sc = spark.sparkContext
-      require(sc.getCheckpointDir.isDefined,
-        s"$ReliableCheckpointConf=true requires SparkContext.setCheckpointDir")
-      // Checkpoint FILES outlive the ContextCleaner unless this static conf
-      // was set at context creation (GraftSession sets it); an externally
-      // built session without it leaks one dir per round to the cluster FS.
-      if (!sc.getConf.getBoolean("spark.cleaner.referenceTracking.cleanCheckpoints", false))
-        System.err.println(s"[graft] WARNING: $ReliableCheckpointConf=true but " +
-          "spark.cleaner.referenceTracking.cleanCheckpoints is false — superseded round " +
-          "checkpoint dirs will accumulate; set it at context creation (GraftSession does)")
-      df.checkpoint()
-    }
-  }
-
   /** Transitive near-duplicate components: the closure of [[dedupNear]]'s
     * pair relation, each document labeled with its component's canonical
     * (minimum) doc_id — the "keep one per duplicate CLUSTER" operator that
@@ -732,11 +698,11 @@ object DedupQueries {
     * O(component diameter) rounds — near-dup clusters are tiny chains, so
     * 2-3 rounds in practice, each over the EDGE set (|pairs|·2 rows,
     * minuscule next to the corpus) and truncated. Truncation mode is a
-    * deployment knob ([[truncate]]): fast executor-local `localCheckpoint`
-    * by default, reliable `checkpoint()` to the cluster FS when the session
-    * opts in — same dataflow. The fixpoint is unique, so the result is
-    * deterministic regardless of scheduling, and a DuckDB recursive CTE
-    * reproduces it exactly. */
+    * deployment knob ([[graft.Plans.truncate]]): fast executor-local
+    * `localCheckpoint` by default, reliable `checkpoint()` to the cluster FS
+    * when the session opts in — same dataflow. The fixpoint is unique, so
+    * the result is deterministic regardless of scheduling, and a DuckDB
+    * recursive CTE reproduces it exactly. */
   def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     componentLabelsMemo(spark, dir)
       .select(col("node").as("doc_id"), col("lab").as("canonical"))
@@ -754,20 +720,12 @@ object DedupQueries {
     * scoped block before the memo entry is published); determinism makes a
     * memoized result bit-identical to a rebuild. The cluster-deployment
     * analog is the persisted pair/label table every production dedup
-    * pipeline maintains. */
-  private def memoArtifact(spark: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    // the truncation mode is part of the key: a session that opts into
-    // reliable checkpointing expects durably-materialized artifacts (and
-    // the fail-fast require when no checkpoint dir is set), so a
-    // local-mode memo entry must not satisfy a reliable-mode request
-    val mode = if (reliableCheckpoint(spark)) "reliable" else "local"
-    graft.Memo.artifact(spark, s"dedup-$kind/$mode/$dir")(build)
-  }
-
-  /** The verified near-dup pair list (doc_a, doc_b), truncated. */
+    * pipeline maintains. Both are [[graft.Plans.truncatedArtifact]]s, so
+    * their keys carry the truncation mode.
+    *
+    * This one is the verified near-dup pair list (doc_a, doc_b), truncated. */
   private[graft] def nearPairsMemo(spark: SparkSession, dir: String): DataFrame =
-    memoArtifact(spark, dir, "pairs") {
+    truncatedArtifact(spark, s"dedup-pairs/$dir") {
       // scoped: truncate() materializes the tiny edge list eagerly, so the
       // LSH candidate cache dedupNear registers internally is dead once
       // this block returns — release it here instead of leaking it to the
@@ -782,7 +740,7 @@ object DedupQueries {
     * is dead once the fixpoint is in hand and the artifact stays
     * self-contained. */
   private def componentLabelsMemo(spark: SparkSession, dir: String): DataFrame =
-    memoArtifact(spark, dir, "labels") {
+    truncatedArtifact(spark, s"dedup-labels/$dir") {
       graft.Caches.scoped {
         val pairs = nearPairsMemo(spark, dir)
         val adj = Relax.adjacency(pairs.toDF("u", "v"),
@@ -832,8 +790,8 @@ object DedupQueries {
     * output-sized, tiny next to the corpus; each of the [[PrIters]] rounds
     * is ONE job — keyed join + partial-agg sum over edges, with the one-row
     * dangling aggregate broadcast-crossJoined into the same plan — and
-    * [[truncate]] keeps plans O(1) exactly as [[dedupComponents]] does. The
-    * final top-20 is TakeOrderedAndProject. */
+    * [[graft.Plans.truncate]] keeps plans O(1) exactly as
+    * [[dedupComponents]] does. The final top-20 is TakeOrderedAndProject. */
   def docPagerank(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
     val pairs = nearPairsMemo(spark, dir)

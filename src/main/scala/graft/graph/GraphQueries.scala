@@ -846,7 +846,7 @@ object GraphQueries {
       val aRaw = graft.Caches.persisted(
         e.join(graft.Plans.broadcastIfSmall(hub, nCusts), "c")
           .groupBy(col("p")).agg(sum(col("h")).as("ar")))
-      auth = graft.dedup.DedupQueries.truncate(
+      auth = graft.Plans.truncate(
         aRaw.crossJoin(broadcast(aRaw.agg(max(col("ar")).as("am"))))
           .select(col("p"), expr("ar * 1000000L div am").as("a")))
     }
@@ -1012,7 +1012,7 @@ object GraphQueries {
     for (_ <- 1 to KcorePeels) {
       // truncate: the survivor set is |V|-sized and feeds both prunes —
       // checkpointing it keeps the lazy edge plan O(rounds) deep, not 2^r
-      val keep = graft.dedup.DedupQueries.truncate(
+      val keep = graft.Plans.truncate(
         edges.groupBy(col("v")).agg(count(lit(1)).as("d"))
           .filter(col("d") >= KcoreK).select(col("v")))
       // gate-broadcast: ≤ |V| ≤ 2|E| rows by the memo count; past the

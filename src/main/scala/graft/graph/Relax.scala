@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.functions._
 
 import graft.Plans
-import graft.dedup.DedupQueries.truncate
+import graft.Plans.truncate
 
 /** The library's one min-relaxation loop — iteration the way the MapReduce
   * paper answers it, a driver loop of shuffle rounds, each round
@@ -26,12 +26,12 @@ import graft.dedup.DedupQueries.truncate
   * every tested scale the width is 1, so every stage of a round is one
   * task.
   *
-  * Every round is truncated ([[graft.dedup.DedupQueries.truncate]]), not
-  * left lazy: it reads the previous iterate twice (carry-through and
-  * neighbour join), so an untruncated plan doubles per round — analysis
-  * and optimizer time go exponential in the round count (measured 7.5 s vs
-  * 2.6 s for 3 BFS rounds at sf0.1, and minutes for dedup_components). The
-  * truncation mode follows `spark.graft.components.reliableCheckpoint`. */
+  * Every round is truncated ([[Plans.truncate]]), not left lazy: it reads
+  * the previous iterate twice (carry-through and neighbour join), so an
+  * untruncated plan doubles per round — analysis and optimizer time go
+  * exponential in the round count (measured 7.5 s vs 2.6 s for 3 BFS
+  * rounds at sf0.1, and minutes for dedup_components). The truncation mode
+  * follows `spark.graft.components.reliableCheckpoint`. */
 object Relax {
 
   /** A symmetrised adjacency `(v, n[, w])`, persisted and hash-partitioned
@@ -64,8 +64,8 @@ object Relax {
   /** Exactly `k` rounds — the fixed budget an unrolled-CTE oracle replays. */
   final case class Fixed(k: Int) extends Rounds
 
-  /** Until a round changes no value — the fixpoint a recursive CTE reaches.
-    * Costs one count job per round, a scan of the truncated round. */
+  /** Until a round changes no value — the fixpoint a recursive CTE reaches
+    * ([[Plans.untilStable]]: one count job per round). */
   case object UntilStable extends Rounds
 
   /** Relax `init` `(v, h)` over `adj`. `hop` is a column over the
@@ -75,25 +75,23 @@ object Relax {
     val width = Plans.sizeWidth(init.sparkSession, adj.rows)
     val offered = lit(null).cast(init.schema("h").dataType)
     def vh(df: DataFrame): DataFrame = df.select(col("v"), col("h"))
-    // one truncated round, (v, h) → (v, h, old): a current row carries its
-    // value as `old` and an offer carries null, so max(old) is v's value
-    // before the round (null: v newly reached)
+    // one round, (v, h) → (v, h, old): a current row carries its value as
+    // `old` and an offer carries null, so max(old) is v's value before the
+    // round (null: v newly reached)
     def round(cur: DataFrame): DataFrame = {
       val offers = adj.df
         .join(Plans.broadcastIfSmall(cur.select(col("v").as("n"), col("h")), adj.rows), "n")
         .select(col("v"), hop.as("h"), offered.as("old"))
-      truncate(cur.select(col("v"), col("h"), col("h").as("old"))
+      cur.select(col("v"), col("h"), col("h").as("old"))
         .unionByName(offers)
         .groupBy(col("v"))
-        .agg(functions.min(col("h")).as("h"), max(col("old")).as("old")))
+        .agg(functions.min(col("h")).as("h"), max(col("old")).as("old"))
     }
     val start = truncate(vh(init).repartition(width, col("v")))
-    rounds match {
-      case Fixed(k) => (1 to k).foldLeft(start)((cur, _) => vh(round(cur)))
-      case UntilStable =>
-        var next = round(start)
-        while (next.filter(!(col("h") <=> col("old"))).count() > 0) next = round(vh(next))
-        vh(next)
-    }
+    vh(rounds match {
+      case Fixed(k) => (1 to k).foldLeft(start)((cur, _) => truncate(round(vh(cur))))
+      case UntilStable => Plans.untilStable(start)(c => round(vh(c)))(
+        _.filter(!(col("h") <=> col("old"))))
+    })
   }
 }

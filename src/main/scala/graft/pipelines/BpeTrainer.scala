@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Plans.{truncate, truncatedArtifact}
 import graft.Tables
 
 /** Distributed BPE (byte-pair-encoding) merge training over the documents
@@ -27,11 +28,11 @@ import graft.Tables
   *      symbol list via a codegen'd `aggregate` fold (left-to-right,
   *      non-overlapping — so `aaa` under merge (a,a) becomes `[aa, a]`).
   *      The chosen pair enters the plan as a broadcast 1-row crossJoin —
-  *      no driver-side collect of the merge value. Each round
-  *      `localCheckpoint`s like [[graft.similarity.SimilarityQueries]]'
-  *      Lloyd loop: the symbol table is referenced by both the next pair
-  *      count and the next merge application, so without truncation the
-  *      plan would double per round.
+  *      no driver-side collect of the merge value. Each round is
+  *      truncated ([[graft.Plans.truncate]]): the symbol table is
+  *      referenced by both the next pair count and the next merge
+  *      application, so without truncation the plan would double per
+  *      round.
   *
   * Exactness: pair counts are integer sums of integer word frequencies —
   * associative under any partitioning — and the tie-break totally orders
@@ -61,10 +62,11 @@ object BpeTrainer {
       |    ELSE concat(acc, array(x)) END)""".stripMargin
 
   /** Runs the training loop; returns (merge table, final per-word symbol
-    * table). Both are materialized (`localCheckpoint`) — callers get
-    * bounded plans.
+    * table). Both are materialized ([[graft.Plans.truncate]]) — callers
+    * get bounded plans.
     *
-    * Memoized per (session, dir) via [[graft.Memo]]: three registered
+    * Memoized per (session, dir, truncation mode) via
+    * [[graft.Plans.truncatedArtifact]]: three registered
     * queries (bpe_train, bpe_encode, token_fertility) consume the same
     * trained tables, and before the memo each re-ran the full
     * [[Merges]]-round loop — the trained-quantizer pattern from
@@ -73,13 +75,12 @@ object BpeTrainer {
     * deterministic (total tie-break), so a memoized result is
     * bit-identical to a retrain. */
   private[graft] def train(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    graft.Memo.artifact(spark, s"bpe-train/$dir")(trainLoop(spark, dir))
+    truncatedArtifact(spark, s"bpe-train/$dir")(trainLoop(spark, dir))
 
   private def trainLoop(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    var syms = wordFreqs(spark, dir)
+    var syms = truncate(wordFreqs(spark, dir)
       .withColumn("syms",
-        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      .localCheckpoint()
+        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")))
     var merges = Vector.empty[DataFrame]
     for (k <- 1 to Merges) {
       // Adjacent symbol pairs weighted by word frequency. zip_with pads the
@@ -95,17 +96,15 @@ object BpeTrainer {
         .agg(sum(col("freq")).as("freq"))
       // Deterministic argmax: freq DESC, then lexicographic — a 1-row
       // TakeOrderedAndProject, never a global sort.
-      val best = pairs
+      val best = truncate(pairs
         .orderBy(desc("freq"), asc("lhs"), asc("rhs"))
-        .limit(1)
-        .localCheckpoint()
+        .limit(1))
       merges = merges :+ best.select(
         lit(k).as("rank"), col("lhs"), col("rhs"), col("freq"))
-      syms = syms
+      syms = truncate(syms
         .crossJoin(broadcast(best.select(col("lhs"), col("rhs"))))
         .withColumn("syms", expr(applyMergeSql))
-        .drop("lhs", "rhs")
-        .localCheckpoint()
+        .drop("lhs", "rhs"))
     }
     (merges.reduce(_ unionAll _).orderBy(col("rank")), syms)
   }

@@ -962,7 +962,7 @@ object DataSelection {
     * limit-1-frame accumulations (selected docs: ≤ k rows broadcast;
     * covered grams: ≤ k·|doc grams| rows, gram-keyed) + one partial-agg
     * count and a 1-row TakeOrdered — never a driver collection, plans
-    * checkpoint-truncated per round ([[graft.dedup.DedupQueries]] policy).
+    * checkpoint-truncated per round ([[graft.Plans.truncate]]).
     * Rounds are inherently sequential (that IS the algorithm); production
     * variants batch picks per round (stochastic greedy) to shrink the
     * round count, not the per-round shape. */
@@ -972,7 +972,7 @@ object DataSelection {
       Tables.documentsSpread(spark, dir)
         .select(col("doc_id"),
           explode(TrainingPrep.ngrams(col("text"), TrainingPrep.NGram)).as("gram")))
-    var selected = graft.dedup.DedupQueries.truncate(
+    var selected = graft.Plans.truncate(
       Seq.empty[(Long, Long, Long)].toDF("round", "doc_id", "gain"))
     var prevCovered: DataFrame = null
     for (r <- 1 to CovK) {
@@ -996,7 +996,7 @@ object DataSelection {
         .groupBy(col("doc_id")).agg(count(lit(1)).as("gain"))
         .orderBy(col("gain").desc, col("doc_id").asc).limit(1)
         .select(lit(r.toLong).as("round"), col("doc_id"), col("gain"))
-      selected = graft.dedup.DedupQueries.truncate(selected.unionByName(winner))
+      selected = graft.Plans.truncate(selected.unionByName(winner))
       // truncate() is an eager checkpoint, so this round's jobs have run:
       // the PREVIOUS round's covered-gram cache is dead — release it now
       // instead of letting CovK copies accumulate until Caches.drain()

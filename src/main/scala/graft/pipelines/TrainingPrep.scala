@@ -1143,8 +1143,8 @@ object TrainingPrep {
     * violating runs in one round — a lag-window flag + a running-anchor
     * regroup, both distinct-score-sized — converges to the same unique fit
     * as the sequential textbook algorithm. Each round is one partial-agg
-    * + one window over the block table; rounds are `localCheckpoint`ed
-    * like every iterative operator here.
+    * + one window over the block table, truncated and polled by
+    * [[graft.Plans.untilStable]] like every until-stable loop here.
     *
     * Parity argument is UNIQUENESS, not replay: the oracle runs the
     * sequential small-step PAV (a single-path recursive CTE over a packed
@@ -1215,18 +1215,15 @@ object TrainingPrep {
         .select(col("blk"), col("lo2").as("lo"),
           col("bp2").as("bp"), col("bn2").as("bn"))
     }
-    var blocks = hist
+    val start = graft.Plans.truncate(hist
       .repartition(1)
       .select(
         row_number().over(Window.orderBy(col("raw_score"))).cast("bigint").as("blk"),
-        col("raw_score").as("lo"), col("p").as("bp"), col("n").as("bn"))
-      .localCheckpoint()
-    var changed = 1L
-    while (changed > 0) {
-      val l1 = flag(blocks)
-      blocks = pool(flag(pool(l1))).localCheckpoint()
-      changed = l1.filter(col("v")).count()
-    }
+        col("raw_score").as("lo"), col("p").as("bp"), col("n").as("bn")))
+    // stops at the first block table with no violation: pooling it again
+    // would change nothing
+    val blocks = graft.Plans.untilStable(start)(b => pool(flag(pool(flag(b)))))(
+      flag(_).filter(col("v")))
     // re-attach scores to their final block: each block's lo IS a score,
     // so a left join seeds the block stats at run starts and an ordered
     // last-non-null fill propagates them across the run — one window,

@@ -38,9 +38,9 @@ object GraftSession {
       // table loaders don't have to mutate config (Tables.events still sets
       // it defensively for externally built sessions)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Reliable-checkpoint mode (graft.dedup.DedupQueries.truncate) writes
-      // one checkpoint dir per label-propagation round; without this the
-      // ContextCleaner reclaims only the in-memory blocks and the
+      // Reliable-checkpoint mode (graft.Plans.truncate) writes one
+      // checkpoint dir per truncated round of every iterative loop; without
+      // this the ContextCleaner reclaims only the in-memory blocks and the
       // cluster-FS dirs accumulate forever on a long-lived session. Static
       // conf — must be set before the context exists, which is why it
       // lives here and not next to the loop.

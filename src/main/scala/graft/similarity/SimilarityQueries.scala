@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.Plans.{truncate, truncatedArtifact}
 import graft.Tables
 import graft.functions.VectorExpressions
 
@@ -329,8 +330,9 @@ object SimilarityQueries {
   }
 
   /** Session-memoized [[nearPairs]] artifact — the verified embedding-
-    * cosine candidate pair list, truncated ([[graft.dedup.DedupQueries]]'
-    * pair-memo pattern applied to the embedding side): three registered
+    * cosine candidate pair list, truncated, its key carrying the truncation
+    * mode ([[graft.Plans.truncatedArtifact]], like
+    * [[graft.dedup.DedupQueries]]' pair memo): three registered
     * queries (mutual-NN, margin mining, kNN label eval) derive from the
     * identical LSH candidate generation + exact-cosine verification, and
     * each previously re-ran it. The scoped block releases nearPairs'
@@ -345,9 +347,9 @@ object SimilarityQueries {
     * consumers feed the count to [[graft.Plans.broadcastIfSmall]] exactly
     * like the graph family's edge memo. */
   private def nearPairsMemo(spark: SparkSession, dir: String): (DataFrame, Long) =
-    graft.Memo.artifact(spark, s"embed-near-pairs/$dir") {
+    truncatedArtifact(spark, s"embed-near-pairs/$dir") {
       graft.Caches.scoped {
-        val df = graft.dedup.DedupQueries.truncate(nearPairs(spark, dir))
+        val df = truncate(nearPairs(spark, dir))
         (df, df.count())
       }
     }
@@ -540,76 +542,79 @@ object SimilarityQueries {
 
   private[graft] val LloydRounds = 3
 
+  /** The TRAINED IVF quantizer, memoized per (session, dir, truncation
+    * mode) by [[graft.Plans.truncatedArtifact]] like the PQ codebook
+    * ([[pqCodebookTable]]): eight registered queries consume a trained
+    * quantizer, and before the memo each re-ran the full Lloyd loop
+    * in-query; a cluster deployment persists the same table. The memo
+    * holds self-contained truncated frames (in reliable mode they survive
+    * executor loss), and every training walks the identical trajectory, so
+    * a memoized result is bit-identical to a retrain. */
+  private[graft] def trainedCentroidTable(spark: SparkSession, dir: String): DataFrame =
+    truncatedArtifact(spark, s"trained-ivf/$dir")(trainCentroidTable(spark, dir))
+
   /** TRAINED IVF coarse quantizer: [[labelCentroids]] as the deterministic
-    * seed, refined by [[LloydRounds]] rounds of Lloyd iteration — assign
-    * every vector to its nearest centroid by cosine (ties to the lower cell
-    * id), recompute each cell's centroid as the exact integer-scaled
-    * component mean of its members. Real IVF trains its quantizer; the
-    * label seed alone only inherits the labels' geometry.
+    * seed, refined by [[LloydRounds]] rounds of [[lloyd]] — assign every
+    * vector to its nearest centroid by cosine, recompute each cell's
+    * centroid as the exact integer-scaled component mean of its members.
+    * Real IVF trains its quantizer; the label seed alone only inherits the
+    * labels' geometry.
     *
     * Determinism is what keeps the oracle exact through THREE rounds of
     * feedback: assignment ranks exact doubles with a total tie-break, and
     * recomputation uses the same `floor(v·1e7+0.5)` bigint sums as the seed
     * — order- and partitioning-independent, so both engines walk the
-    * identical centroid trajectory. Each round `localCheckpoint`s like
-    * [[graft.dedup.DedupQueries.dedupComponents]]' loop: the assignment
-    * references the previous round's centroids once per comparison, so
-    * without truncation the plan would nest per round. A lost executor
-    * restarts the (seconds-long) training job — acceptable for a bounded
-    * loop; the components operator documents the reliable-checkpoint knob
-    * for loops where it isn't.
-    *
-    * Scale shape per round: one narrow pass over the corpus against a
-    * broadcast ≤|cells|-row centroid table (argmax via one partial-agg
-    * max-of-struct, no window over the corpus), then the same exploded
-    * (cell, dim) partial aggregation as [[labelCentroids]]. Empty cells
-    * simply drop out of the next round, identically in both engines. */
-  /** The TRAINED IVF quantizer, memoized per (session, dir) in
-    * [[graft.Memo]] like the PQ codebook ([[pqCodebookTable]]) — the
-    * [[graft.graph.GraphQueries]] edge-memo pattern applied to model
-    * artifacts: eight registered queries consume a trained quantizer, and
-    * before the memo each re-ran the full Lloyd loop in-query (the r9
-    * bench-mover note: "a deployment that reuses a stored quantizer pays
-    * the r7 price" — the memo IS that stored quantizer for the session;
-    * a cluster deployment persists the same table). The trained frames are
-    * already localCheckpoint-truncated, so the memo holds self-contained
-    * materialized plans. Determinism makes this safe: every training walks
-    * the identical trajectory, so a memoized result is bit-identical to a
-    * retrain. */
-  private[graft] def trainedCentroidTable(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.artifact(spark, s"trained-ivf/$dir")(trainCentroidTable(spark, dir))
-
+    * identical centroid trajectory. */
   private def trainCentroidTable(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-    var cents = centroidVectors(spark, dir)
-      .select(col("label").cast("bigint").as("cell"), col("centroid"))
-      .localCheckpoint()
+    val points = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("x"))
+    val seeds = centroidVectors(spark, dir)
+      .select(col("label").cast("bigint").as("id"), col("centroid").as("c"))
+    lloyd(points, seeds, Nil, LloydRounds)(expr("cosine_sim(x, c)"))
+      .select(col("id").as("cell"), col("pos"), col("v").as("centroid_v"), col("n_vectors"))
+  }
+
+  /** The Lloyd loop of the IVF quantizer and the PQ codebooks: `rounds`
+    * rounds from `seeds` `(keys…, id, c)` over `points` `(…, keys…, x)`,
+    * where every column of `points` but the vector `x` identifies a point.
+    * A round assigns each point to the seed of its keys with the highest
+    * `score` (a column over `x` and `c`), ties to the lower id —
+    * `max(struct(score, -id, x))` is unique per point, so the carried
+    * vector never takes part in the comparison — then recomputes each seed
+    * as the exact mean of its members: `floor(x·1e7+0.5)` bigint sums by
+    * (keys…, id, pos), re-assembled in position order. Seeds that win no
+    * point drop out, identically in the oracle. Returns the last round's
+    * `(keys…, id, pos, v, n_vectors)`.
+    *
+    * Scale shape per round: one narrow pass over the points against the
+    * broadcast seed table (argmax via one partial-agg max-of-struct, no
+    * window), then an exploded (keys…, id, pos) partial aggregation. Every
+    * round is truncated ([[graft.Plans.truncate]]): the assignment reads
+    * the previous seeds once per comparison, so a lazy plan would nest per
+    * round. */
+  private def lloyd(points: DataFrame, seeds: DataFrame, keys: Seq[String], rounds: Int)(
+      score: Column): DataFrame = {
+    val point = points.columns.toSeq.filter(_ != "x").map(col)
+    val byKey = keys.map(col)
+    var cents = truncate(seeds)
     var grouped: DataFrame = null
-    for (_ <- 1 to LloydRounds) {
-      val assigned = base.crossJoin(broadcast(cents))
-        .withColumn("csim", expr("cosine_sim(e, centroid)"))
-        .groupBy(col("vec_id"))
-        // argmax by (csim, -cell): highest cosine, ties to the LOWER cell id;
-        // (csim, negcell) is unique per vector so the carried vector never
-        // participates in the comparison
-        .agg(max(struct(col("csim"), (-col("cell")).as("negcell"), col("e").as("ev"))).as("m"))
-        .select((-col("m.negcell")).as("cell"), col("m.ev").as("e"))
-      grouped = assigned
-        .select(col("cell"), posexplode(col("e")))
-        .groupBy(col("cell"), col("pos"))
+    for (_ <- 1 to rounds) {
+      val assigned = points.join(broadcast(cents), keys)
+        .groupBy(point: _*)
+        .agg(max(struct(score.as("score"), (-col("id")).as("negid"), col("x").as("xv"))).as("m"))
+        .select(byKey ++ Seq((-col("m.negid")).as("id"), col("m.xv").as("x")): _*)
+      grouped = truncate(assigned
+        .select(byKey ++ Seq(col("id"), posexplode(col("x"))): _*)
+        .groupBy(byKey ++ Seq(col("id"), col("pos")): _*)
         .agg(
-          sum(floor(col("col") * lit(1e7) + lit(0.5))).as("s"),
+          sum(floor(col("col") * lit(1e7) + lit(0.5))).as("sv"),
           count(lit(1)).as("n_vectors"))
-        .select(col("cell"), col("pos").cast("bigint").as("pos"),
-          (col("s").cast("double") / (col("n_vectors").cast("double") * lit(1e7))).as("centroid_v"),
-          col("n_vectors"))
-        .localCheckpoint()
-      cents = grouped
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("centroid_v"))))
-          .getField("centroid_v").as("centroid"))
-        .localCheckpoint()
+        .select(byKey ++ Seq(col("id"), col("pos").cast("bigint").as("pos"),
+          (col("sv").cast("double") / (col("n_vectors").cast("double") * lit(1e7))).as("v"),
+          col("n_vectors")): _*))
+      cents = truncate(grouped
+        .groupBy(byKey :+ col("id"): _*)
+        .agg(array_sort(collect_list(struct(col("pos"), col("v")))).getField("v").as("c")))
     }
     grouped
   }
@@ -1063,48 +1068,20 @@ object SimilarityQueries {
     * vec_id j's subvector (deterministic, like the label-seeded IVF), then
     * [[PqRounds]] Lloyd rounds — assign each subvector to its nearest
     * codeword by squared L2 (ties to the lower code), recompute codewords
-    * as exact integer-scaled component means. Same determinism contract as
+    * as exact integer-scaled component means ([[lloyd]], per subspace).
+    * Same determinism contract, truncation and mode-keyed memo as
     * [[trainedCentroidTable]]: both engines walk the identical trajectory.
-    *
-    * Scale shape per round: one narrow pass over (corpus × PqM) subvector
-    * rows against a broadcast PqM·PqK-row codebook (argmin via one
-    * partial-agg max-of-struct), then a (s, code, dim) partial aggregation
-    * whose width is the codebook, not the corpus. */
+    * A round passes over (corpus × PqM) subvector rows against a broadcast
+    * PqM·PqK-row codebook; its aggregate is codebook-wide, not corpus-wide. */
   private[graft] def pqCodebookTable(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.artifact(spark, s"trained-pq/$dir")(trainPqCodebookTable(spark, dir))
+    truncatedArtifact(spark, s"trained-pq/$dir")(trainPqCodebookTable(spark, dir))
 
   private def trainPqCodebookTable(spark: SparkSession, dir: String): DataFrame = {
-    val subs = subvectors(spark, dir)
-    var cents = subs.filter(col("vec_id") < PqK)
-      .select(col("s"), col("vec_id").as("code"), col("sub").as("c"))
-      .localCheckpoint()
-    var grouped: DataFrame = null
-    for (_ <- 1 to PqRounds) {
-      val assigned = subs.join(broadcast(cents), Seq("s"))
-        .withColumn("d", l2("sub", "c"))
-        .groupBy(col("vec_id"), col("s"))
-        // argmin by (d, code): max of (-d, -code) — lowest distance, ties
-        // to the LOWER code id; unique per (vec_id, s) so the carried
-        // subvector never participates in the comparison
-        .agg(max(struct((-col("d")).as("nd"), (-col("code")).as("nc"), col("sub").as("sv"))).as("m"))
-        .select(col("s"), (-col("m.nc")).as("code"), col("m.sv").as("sub"))
-      grouped = assigned
-        .select(col("s"), col("code"), posexplode(col("sub")))
-        .groupBy(col("s"), col("code"), col("pos"))
-        .agg(
-          sum(floor(col("col") * lit(1e7) + lit(0.5))).as("sv"),
-          count(lit(1)).as("n_vectors"))
-        .select(col("s").cast("bigint").as("s"), col("code"), col("pos").cast("bigint").as("pos"),
-          (col("sv").cast("double") / (col("n_vectors").cast("double") * lit(1e7))).as("codeword_v"),
-          col("n_vectors"))
-        .localCheckpoint()
-      cents = grouped
-        .groupBy(col("s"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("codeword_v"))))
-          .getField("codeword_v").as("c"))
-        .localCheckpoint()
-    }
-    grouped
+    val subs = subvectors(spark, dir).withColumn("s", col("s").cast("bigint"))
+    lloyd(subs.select(col("vec_id"), col("s"), col("sub").as("x")),
+      subs.filter(col("vec_id") < PqK).select(col("s"), col("vec_id").as("id"), col("sub").as("c")),
+      Seq("s"), PqRounds)(-l2("x", "c"))
+      .select(col("s"), col("id").as("code"), col("pos"), col("v").as("codeword_v"), col("n_vectors"))
   }
 
   /** Registered query: the trained PQ codebooks, one scalar row per

@@ -538,13 +538,13 @@ object TextQueries {
         .unionByName(pairs.select(col("v").as("src"), col("u").as("dst"))))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val n = graft.Memo.countOf(spark, s"textrank-nodes/$dir", deg)
-    var rank = graft.dedup.DedupQueries.truncate(
+    var rank = graft.Plans.truncate(
       deg.select(col("src").as("word"), col("deg"), lit(TrScale / n).as("rank")))
     for (_ <- 1 to TrRounds) {
       val sums = edges.join(rank, edges("src") === rank("word"))
         .select(col("dst"), expr("rank div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      rank = graft.dedup.DedupQueries.truncate(
+      rank = graft.Plans.truncate(
         rank.as("r").join(sums, col("r.word") === sums("dst"), "left")
           .select(col("r.word").as("word"), col("r.deg").as("deg"),
             (lit(3L * TrScale / (20L * n)) +

@@ -28,8 +28,7 @@ class ConfSuite extends SparkSpec {
       (Plans.FanOutKey, "yes", () => Plans.fanOut(df, col("v"))), // boolean
       ("spark.graft.maxBasketSize", "many", // int
         () => graph.GraphQueries.cappedCustBaskets(spark, Sf0001)),
-      (dedup.DedupQueries.ReliableCheckpointConf, "on",
-        () => dedup.DedupQueries.truncate(df)))
+      (Plans.ReliableCheckpointKey, "on", () => Plans.truncate(df)))
     for ((key, bad, read) <- cases) {
       val e = withConf(key, bad)(intercept[IllegalArgumentException](read()))
       assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"),

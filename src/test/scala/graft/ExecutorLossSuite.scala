@@ -21,12 +21,15 @@ import graft.streaming.KvUpsert
   *
   * What this pins down, beyond the task-level retry ExecutionSemanticsSuite
   * already proves:
-  *  - `localCheckpoint`'s documented fragility (DedupQueries.truncate) is
+  *  - `localCheckpoint`'s documented fragility (Plans.truncate) is
   *    REAL: its blocks die with their executor and the truncated lineage
   *    cannot recompute them — the job fails, deterministically;
   *  - reliable `checkpoint()` to a shared dir survives the identical loss;
   *  - `dedup_components` in reliable mode completes (with the right answer)
   *    while an executor is killed mid-run;
+  *  - the truncated session memos (dedup's pairs and labels, the trained
+  *    IVF quantizer) built in reliable mode survive the loss of every
+  *    executor;
   *  - the KvUpsert state survives executor loss between batches (manifest +
   *    files, not executor memory).
   *
@@ -115,7 +118,7 @@ class ExecutorLossSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedup_components (reliable mode) completes correctly under a mid-run executor kill") {
-    spark.conf.set(DedupQueries.ReliableCheckpointConf, "true")
+    spark.conf.set(Plans.ReliableCheckpointKey, "true")
     try {
       val victims = executorPids()
       val killer = new Thread(() => {
@@ -134,7 +137,7 @@ class ExecutorLossSuite extends AnyFunSuite with BeforeAndAfterAll {
       Caches.drain()
       assert(survived.nonEmpty)
       assert(survived == calm, "chaos run diverged from the calm run")
-    } finally spark.conf.unset(DedupQueries.ReliableCheckpointConf)
+    } finally spark.conf.unset(Plans.ReliableCheckpointKey)
   }
 
   test("persisted session memos (graph edges, LM model) survive executor loss via lineage recompute") {
@@ -165,7 +168,7 @@ class ExecutorLossSuite extends AnyFunSuite with BeforeAndAfterAll {
     // lineage to recompute. In reliable mode the blocks live in the
     // checkpoint dir, not executor memory, so a consumer reading the memo
     // AFTER every executor died must still get the identical answer.
-    spark.conf.set(DedupQueries.ReliableCheckpointConf, "true")
+    spark.conf.set(Plans.ReliableCheckpointKey, "true")
     try {
       val calm = DedupQueries.dedupComponents(spark, "/root/testdata/sf0.001")
         .collect().map(_.toSeq.mkString("|")).toSet // builds pairs+labels memos
@@ -177,7 +180,30 @@ class ExecutorLossSuite extends AnyFunSuite with BeforeAndAfterAll {
       assert(calm.nonEmpty && after == calm,
         "reliable-mode dedup memo did not survive total executor loss")
     } finally {
-      spark.conf.unset(DedupQueries.ReliableCheckpointConf)
+      spark.conf.unset(Plans.ReliableCheckpointKey)
+      Memo.evictSession(spark) // drop the reliable-mode entries for later tests
+    }
+  }
+
+  test("trained IVF quantizer memo (reliable mode) survives executor loss between build and consume") {
+    // The trained-ivf memo holds the truncated Lloyd rounds, keyed by the
+    // truncation mode: built in reliable mode, its blocks live in the
+    // checkpoint dir, so a read after every executor died must still give
+    // the identical rows.
+    val dir = "/root/testdata/sf0.001"
+    def rows() = graft.similarity.SimilarityQueries.ivfTrain(spark, dir)
+      .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    spark.conf.set(Plans.ReliableCheckpointKey, "true")
+    try {
+      val calm = rows() // builds the trained-ivf memo
+      Caches.drain()
+      killAllExecutors()
+      val after = rows()
+      Caches.drain()
+      assert(calm.nonEmpty && after == calm,
+        "reliable-mode trained quantizer did not survive total executor loss")
+    } finally {
+      spark.conf.unset(Plans.ReliableCheckpointKey)
       Memo.evictSession(spark) // drop the reliable-mode entries for later tests
     }
   }

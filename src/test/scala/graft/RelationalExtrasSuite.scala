@@ -128,23 +128,27 @@ class RelationalExtrasSuite extends SparkSpec {
     }
   }
 
-  /** The until-stable label loops whose rounds truncate through
-    * `DedupQueries.truncate`, so they follow its reliable-checkpoint mode. */
-  private val truncatingLoops = Map[String, (SparkSession, String) => DataFrame](
-    "dedup_components" -> DedupQueries.dedupComponents,
-    "source_clusters" -> graft.text.CorpusStats.sourceClusters)
+  /** Every registered query whose loop truncates through `Plans.truncate`
+    * (embed_mutual_nn stands for the consumers of the `embed-near-pairs`
+    * memo), so each follows its reliable-checkpoint mode. */
+  private val truncatingLoops: Map[String, (SparkSession, String) => DataFrame] = Seq(
+    "dedup_components", "source_clusters", "graph_bfs_hops", "graph_sssp",
+    "er_golden_records", "graph_kcore", "copurchase_hits", "textrank_keywords",
+    "doc_pagerank", "coverage_select", "quality_isotonic", "bpe_train", "ivf_train",
+    "pq_train", "embed_mutual_nn").map(n => n -> SparkEntry.query(n).run).toMap
 
   test("dedup_components: reliable mode without a checkpoint dir fails fast") {
     // Must run before the reliable-mode test below: setCheckpointDir is
     // one-way on the shared session. Skip (vacuous) if one is already set.
     assume(spark.sparkContext.getCheckpointDir.isEmpty)
-    spark.conf.set(DedupQueries.ReliableCheckpointConf, "true")
+    spark.conf.set(Plans.ReliableCheckpointKey, "true")
     try {
       for ((name, q) <- truncatingLoops) {
-        val e = intercept[IllegalArgumentException](q(spark, Sf0001).collect())
+        val e = withClue(s"$name: ")(
+          intercept[IllegalArgumentException](q(spark, Sf0001).collect()))
         assert(e.getMessage.contains("setCheckpointDir"), s"$name: ${e.getMessage}")
       }
-    } finally spark.conf.unset(DedupQueries.ReliableCheckpointConf)
+    } finally spark.conf.unset(Plans.ReliableCheckpointKey)
   }
 
   test("dedup_components: reliable-checkpoint mode produces identical labels") {
@@ -156,13 +160,13 @@ class RelationalExtrasSuite extends SparkSpec {
     val base = truncatingLoops.map { case (name, q) => name -> rows(q) }
     val ckptDir = Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(ckptDir)
-    spark.conf.set(DedupQueries.ReliableCheckpointConf, "true")
+    spark.conf.set(Plans.ReliableCheckpointKey, "true")
     try {
       for ((name, q) <- truncatingLoops)
         assert(rows(q) == base(name), s"$name: reliable-mode rows differ")
       // the rounds actually wrote through the reliable dir
       assert(Files.list(Paths.get(ckptDir)).iterator().hasNext)
-    } finally spark.conf.unset(DedupQueries.ReliableCheckpointConf)
+    } finally spark.conf.unset(Plans.ReliableCheckpointKey)
   }
 
   test("events_funnel: stages are ordered and monotonically shrinking") {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * program has one row in README.md's "Settings" table, and every row
   * names a setting the program still reads — so a new setting cannot land
   * unlisted, and a removed one cannot linger in the docs. Likewise every
-  * object with a `main` has one row in README's "Entry points" table. */
+  * object with a `main` has one row in README's "Entry points" table, and
+  * `Plans.truncate` is the one place the program truncates lineage. */
 class SettingsSuite extends AnyFunSuite {
 
   private val Literal = "\"(spark\\.graft\\.[A-Za-z0-9_.]+|SPARK_GRAFT_[A-Z0-9_]+)\"".r
@@ -34,6 +35,26 @@ class SettingsSuite extends AnyFunSuite {
     assert(unlisted.isEmpty && stale.isEmpty,
       s"read but not in README's Settings table: ${unlisted.toSeq.sorted.mkString(", ")}; " +
         s"in the table but read nowhere: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("src/main/scala truncates lineage only inside Plans.truncate") {
+    val Call = "localCheckpoint\\(|\\.checkpoint\\(".r
+    val plans = Paths.get("src/main/scala/graft/Plans.scala")
+    val plansLines = Files.readAllLines(plans).asScala.toIndexedSeq
+    // Plans.truncate's body: its def line through its closing brace
+    val from = plansLines.indexWhere(_.contains("def truncate("))
+    val body = if (from < 0) Range(0, 0) else from to plansLines.indexWhere(_ == "  }", from)
+    val outside = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices
+          .filter(i => Call.findFirstIn(lines(i)).nonEmpty)
+          .filterNot(i => p.endsWith(plans) && body.contains(i))
+          .map(i => s"$p:${i + 1}")
+      }
+    assert(outside.isEmpty,
+      s"lineage truncated outside Plans.truncate: ${outside.sorted.mkString(", ")}")
+    assert(from >= 0, "Plans.truncate not found")
   }
 
   test("README's Entry points table lists exactly the objects in src/main/scala with a main") {
